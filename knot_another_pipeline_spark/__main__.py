@@ -154,13 +154,22 @@ def main(argv: list[str] | None = None) -> int:
 
             from knot_another_pipeline_spark.sources.ingest import read_silver
 
+            days = args.days.split(",") if args.days else None
             silver = read_silver(spark, args.silver)
+            if days:
+                # Prune on silver's year/month/day partitions, so a targeted
+                # rebuild scans only its days' files.
+                from pyspark.sql import functions as F
+
+                silver = silver.filter(
+                    F.make_date("year", "month", "day").isin(days)
+                )
             result = refresh_gold(
                 spark,
                 silver,
                 output_root=args.output,
                 mode=args.mode,
-                days=args.days.split(",") if args.days else None,
+                days=days,
                 uid_col=resolve_column(silver, *ID_ALIASES) or "mmsi",
                 ts_col=resolve_column(silver, "event_ts", *TIMESTAMP_ALIASES)
                 or "event_ts",
@@ -173,13 +182,14 @@ def main(argv: list[str] | None = None) -> int:
             for name, path in result.written.items():
                 print(f"{name}: {path}")
             if result.report is not None:
-                for r in result.report.collect():
+                checks = result.report.collect()
+                for r in checks:
                     status = "PASS" if r["passed"] else "FAIL"
                     print(
                         f"[{status}] {r['check_name']}: observed={r['observed']}"
                         f" expected={r['expected']} delta={r['delta']}"
                     )
-                if any(not r["passed"] for r in result.report.collect()):
+                if any(not r["passed"] for r in checks):
                     return 1
         elif args.cmd == "export-tracks":
             from knot_another_pipeline_spark.operators.tracks import export_tracks

@@ -11,7 +11,8 @@ programmatic form ``pipelines/refresh_gold_tables.py:184-262``; math spec
    ``gT = COUNT(DISTINCT h3)``.                                [A3]
 3. Per (vessel, day) activity stats ``win_cnt``/``geo_cnt`` — computed
    once, joined twice (the reference repeats the subquery for ua/ub;
-   here the DataFrame is built once so Catalyst reuses the exchange). [A4, J2]
+   here one (vessel, day) window derives them, and the same window feeds
+   the pre-join prune). [A4, J2]
 4. Overlap scores: ``temporal_o = hT / NULLIF(LEAST(hA,hB),0)``,
    ``spatial_o = gT / NULLIF(LEAST(gA,gB),0)``,
    ``gto = 0.5*(temporal_o+spatial_o)``; keep pairs with ``gT > 1``
@@ -27,12 +28,18 @@ Scale design (100 TB story):
   salting or filtering mega-cells before the join.
 - The per-entity stats table is orders of magnitude smaller than the pair
   table; Catalyst picks broadcast automatically below the threshold, and
-  both stats joins reuse one aggregation.
+  both stats joins reuse one window.
+- Exact pre-join prune (REPOSE-style: prune with an exact bound before the
+  expensive join). Every cell a pair shares is a cell of both vessels, so
+  ``gT <= min(gA, gB)``; a (vessel, day) with ``geo_cnt <=
+  min_shared_cells`` can never pass the ``gT`` filter and leaves the join
+  input. Moored vessels (one cell all day) are the quadratic bulk of a
+  port cell, so this removes most of its join rows without a cap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from knot_another_pipeline_spark.functions.geo import haversine_m
 
@@ -44,6 +51,19 @@ def _shuffle_partitions(spark) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+def _with_entity_period_stats(base: DataFrame) -> DataFrame:
+    """``base`` plus each row's entity-period activity: ``win_cnt`` (its
+    windows) and ``geo_cnt`` (its distinct cells), over one
+    (uid, day_date) window."""
+    per = Window.partitionBy("uid", "day_date")
+    return base.withColumns(
+        {
+            "win_cnt": F.count(F.lit(1)).over(per),
+            "geo_cnt": F.size(F.collect_set("cell").over(per)).cast("long"),
+        }
+    )
 
 
 def oversize_cell_windows(
@@ -140,7 +160,13 @@ def co_movement_pairs(
         F.col(cell_col).alias("cell"),
     )
 
-    join_input = base
+    # Exact pre-join prune: gT <= min(gA, gB), so an entity-period with
+    # geo_cnt <= min_shared_cells can never reach an output row. The same
+    # window feeds the ua/ub denominators in score_co_located.
+    counted = _with_entity_period_stats(base)
+    join_input = counted.filter(
+        F.col("geo_cnt") > F.lit(min_shared_cells)
+    ).select("uid", "day_date", "w", "cell")
     if max_entities_per_cell is not None:
         # Broadcast the OVERSIZE set, not the keep-list. The keep-list is
         # nearly every distinct (day, window, cell) combo — at AIS month
@@ -148,7 +174,10 @@ def co_movement_pairs(
         # is tiny *by construction* (it is the skew being guarded), so its
         # broadcast is bounded regardless of corpus size; remove matches
         # with a left_anti join. Same semantics, scale-safe.
-        join_input = base.join(
+        # The oversize set is counted on the UNPRUNED base: pruned
+        # entities still crowd the cell-window, so the trim is the same
+        # with or without the prune.
+        join_input = join_input.join(
             F.broadcast(oversize_cell_windows(base, max_entities_per_cell)),
             ["day_date", "w", "cell"],
             "left_anti",
@@ -186,7 +215,7 @@ def co_movement_pairs(
 
     return score_co_located(
         co_located,
-        base,
+        counted,
         min_shared_cells=min_shared_cells,
         assume_unique_windows=assume_unique_windows,
     )
@@ -209,6 +238,8 @@ def score_co_located(
     ``base``: uid, day_date, w, cell — the rollup the per-entity
     denominators come from (reference computes vessel stats from the full
     hourly table, ``create_pairs_daily.sql:57-66``, before any pairing).
+    When ``base`` already carries ``win_cnt``/``geo_cnt`` (the windowed
+    frame :func:`co_movement_pairs` pruned with) they are used as is.
     """
     if assume_unique_windows:
         # ONE explicit exchange on (pair, period), then BOTH aggregation
@@ -257,10 +288,11 @@ def score_co_located(
         )
 
     # Per-entity per-period activity stats — built once, joined twice.
-    stats = base.groupBy("uid", "day_date").agg(
-        F.count(F.lit(1)).alias("win_cnt"),
-        F.countDistinct("cell").alias("geo_cnt"),
-    )
+    if "geo_cnt" not in base.columns:
+        base = _with_entity_period_stats(base)
+    # The window output is already hash-partitioned on (uid, day_date),
+    # so this distinct adds no exchange.
+    stats = base.select("uid", "day_date", "win_cnt", "geo_cnt").distinct()
 
     ua = stats.select(
         F.col("uid").alias("uid_a"),

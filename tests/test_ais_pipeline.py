@@ -336,6 +336,203 @@ def test_refresh_replace_fewer_days_totals_cover_full_history(spark, tmp_path):
     assert totals[("A", "B")]["total_days_observed"] == 2
 
 
+def _port_silver(spark, day: str):
+    """One day of a stationary port cluster: P0..P7 moored in one cell,
+    of which P0-P2 sail out together at hour 6; a 4-vessel fleet that
+    crosses the port cell at hour 3; Q0/Q1 sharing exactly two cells;
+    a solitary ship; junk rows."""
+    rows = []
+    for h in range(12):
+        ts = f"{day} {h:02d}:15:00"
+        for p in range(8):
+            if p < 3 and h >= 6:
+                rows.append((f"P{p}", ts, 11.0 + h * 0.4, 21.0 + h * 0.4, 9.0))
+            else:
+                rows.append((f"P{p}", ts, 10.0, 20.0, 0.1))
+        for f in range(4):
+            lat, lon = (10.0, 20.0) if h == 3 else (5.0 + h * 0.5, 15.0 + h * 0.5)
+            rows.append((f"F{f}", f"{day} {h:02d}:{20 + f}:00", lat, lon, 12.0))
+        rows.append(("S", ts, 60.0, -150.0, 3.0))
+    for h in range(6):
+        for q in (0, 1):
+            lat = 30.0 + h if h < 2 else 30.0 + h + 5 * q
+            rows.append((f"Q{q}", f"{day} {h:02d}:40:00", lat, 40.0, 7.0))
+    rows.append(("G", "not-a-date", 10.0, 10.0, 1.0))
+    rows.append(("H", f"{day} 01:00:00", 99.0, 10.0, 1.0))
+    rows.append((None, f"{day} 01:00:00", 10.0, 10.0, 1.0))
+    return spark.createDataFrame(
+        rows,
+        "mmsi string, base_date_time string, latitude double, longitude double, sog double",
+    )
+
+
+def _gold_oracle(hourly_rows, silver_kept, min_shared_cells, cap):
+    """Plain-Python pairs_daily, pairs_total and DQ report from the hourly
+    rows: the reference all-pairs definition, with cell-windows above
+    ``cap`` left out of the pairing but counted in the denominators."""
+    import statistics
+    from collections import defaultdict
+
+    at = defaultdict(set)
+    wins, geos = defaultdict(set), defaultdict(set)
+    for r in hourly_rows:
+        at[(r["dt"], r["hour_ts"], r["h3_index"])].add(r["mmsi"])
+        wins[(r["mmsi"], r["dt"])].add(r["hour_ts"])
+        geos[(r["mmsi"], r["dt"])].add(r["h3_index"])
+    shared = defaultdict(lambda: [0, set()])
+    trimmed = 0
+    for (day, _, cell), uids in at.items():
+        if cap is not None and len(uids) > cap:
+            trimmed += 1
+            continue
+        for a in uids:
+            for b in uids:
+                if a < b:
+                    shared[(a, b, day)][0] += 1
+                    shared[(a, b, day)][1].add(cell)
+    daily = {}
+    for (a, b, day), (ht, cells) in shared.items():
+        gt = len(cells)
+        if gt <= min_shared_cells:
+            continue
+        ha, hb = len(wins[(a, day)]), len(wins[(b, day)])
+        ga, gb = len(geos[(a, day)]), len(geos[(b, day)])
+        t, sp = ht / min(ha, hb), gt / min(ga, gb)
+        daily[(a, b, day)] = (ha, hb, ga, gb, ht, gt, t, sp, 0.5 * (t + sp))
+    by_pair = defaultdict(list)
+    for (a, b, _), v in daily.items():
+        by_pair[(a, b)].append(v[-1])
+    totals = {
+        k: (len(g), sum(x >= 0.4 for x in g), max(g), min(g),
+            statistics.fmean(g), statistics.median(g))
+        for k, g in by_pair.items()
+    }
+    msgs = sum(r["message_count"] for r in hourly_rows)
+    report = {
+        "uid_hourly_rows_positive": (len(hourly_rows), 1),
+        "sum_message_count_matches_silver": (msgs, silver_kept),
+        "sum_source_row_count_matches_silver": (msgs, silver_kept),
+        "pairs_rows_nonnegative": (len(daily), 0),
+    }
+    if cap is not None:
+        report["mega_cell_windows_trimmed"] = (trimmed, 0)
+    return daily, totals, report
+
+
+def _approx_rows(got: dict, want: dict):
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k] == pytest.approx(want[k], abs=1e-12), k
+
+
+@pytest.mark.parametrize("min_shared_cells", [0, 1, 2])
+def test_refresh_prune_and_readback_exact(spark, tmp_path, min_shared_cells):
+    """The pre-join prune (geo_cnt <= min_shared_cells can never pair) and
+    the write-once/read-back flow give the all-pairs answer, with the skew
+    cap trimming the port cell; an append of a day the gold root already
+    holds reports only its own rows."""
+    from knot_another_pipeline_spark.operators.rollup import build_uid_hourly_h3
+    from knot_another_pipeline_spark.plans.gold_refresh import refresh_gold
+
+    gold = str(tmp_path / "gold")
+    cap = 4
+    kw = dict(min_shared_cells=min_shared_cells, max_entities_per_cell=cap)
+
+    def check(silver, mode):
+        result = refresh_gold(spark, silver, output_root=gold, mode=mode, **kw)
+        hourly = build_uid_hourly_h3(silver).collect()
+        kept = sum(r["message_count"] for r in hourly)
+        daily, totals, report = _gold_oracle(hourly, kept, min_shared_cells, cap)
+        got_report = {
+            r["check_name"]: (r["observed"], r["expected"])
+            for r in result.report.collect()
+        }
+        assert got_report == report
+        got_daily = {
+            (r["uid_a"], r["uid_b"], r["day_date"]): tuple(r)[3:]
+            for r in result.pairs.collect()
+        }
+        _approx_rows(got_daily, daily)
+        return daily, totals
+
+    day2 = _port_silver(spark, "2025-01-02")
+    daily, totals = check(_port_silver(spark, "2025-01-01").union(day2), "replace")
+    assert daily, "fixture must produce pairs"
+    # the moored port vessels (one cell all day) never pair at msc >= 1
+    if min_shared_cells >= 1:
+        assert not [k for k in daily if k[0] > "P2" and k[1].startswith("P")]
+    got_totals = {
+        (r["uid_a"], r["uid_b"]): tuple(r)[2:]
+        for r in spark.read.parquet(f"{gold}/pairs_total").collect()
+    }
+    _approx_rows(got_totals, totals)
+    if min_shared_cells != 1:
+        return
+    # append a day the root already holds: the read-back and the report
+    # see this run's rows only, while pairs_daily keeps both copies
+    daily2, _ = check(day2, "append")
+    stored = spark.read.parquet(f"{gold}/pairs_daily").count()
+    assert stored == len(daily) + len(daily2)
+
+
+def test_refresh_reads_silver_once(spark, tmp_path):
+    """A refresh with output and DQ checks reads each silver row exactly
+    once: the hourly table is written once and everything downstream
+    (pairs, totals, the DQ counts) comes from the gold it wrote."""
+    from knot_another_pipeline_spark.plans.gold_refresh import refresh_gold
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def bump(_):
+        seen.add(1)
+        return True
+
+    silver = _ais_fixture(spark)
+    n = silver.count()
+    counted = silver.filter(F.udf(bump, "boolean").asNondeterministic()("mmsi"))
+    result = refresh_gold(
+        spark, counted, output_root=str(tmp_path / "gold"), run_checks=True
+    )
+    assert all(r["passed"] for r in result.report.collect())
+    result.pairs.collect()
+    result.totals.collect()
+    assert seen.value == n
+
+
+def test_refresh_days_dq_counts_only_those_days(spark, tmp_path):
+    """A targeted rebuild filters silver, not hourly, so the observed
+    silver count and the hourly sums cover the same day and DQ passes —
+    through refresh_gold and through the CLI."""
+    from knot_another_pipeline_spark.__main__ import main
+    from knot_another_pipeline_spark.plans.gold_refresh import refresh_gold
+    from knot_another_pipeline_spark.sources.ingest import to_silver, write_silver
+
+    both = _mini_silver(spark, "2025-01-01").union(_mini_silver(spark, "2025-01-02"))
+    result = refresh_gold(
+        spark, both, output_root=str(tmp_path / "gold"), days=["2025-01-02"]
+    )
+    report = {r["check_name"]: r for r in result.report.collect()}
+    msg = report["sum_message_count_matches_silver"]
+    assert (msg["observed"], msg["expected"]) == (4, 4) and msg["passed"]
+    assert {str(r["dt"]) for r in result.hourly.collect()} == {"2025-01-02"}
+    # a day silver does not hold: an empty rollup, reported, not raised
+    result = refresh_gold(
+        spark, both, output_root=str(tmp_path / "gold"), days=["2025-01-05"]
+    )
+    report = {r["check_name"]: r for r in result.report.collect()}
+    assert not report["uid_hourly_rows_positive"]["passed"]
+    assert report["sum_message_count_matches_silver"]["expected"] == 0
+
+    silver = str(tmp_path / "silver")
+    write_silver(to_silver(both), silver)
+    gold = str(tmp_path / "gold_cli")
+    assert main([
+        "refresh", "--silver", silver, "--output", gold, "--days", "2025-01-02",
+    ]) == 0
+    days = spark.read.parquet(f"{gold}/uid_hourly_h3").select("dt").distinct()
+    assert [str(r["dt"]) for r in days.collect()] == ["2025-01-02"]
+
+
 def test_backfill_track_ids(spark):
     """P20: missing ids (null or pandas' stringified nan/None/NaT) get
     unique track_ placeholders; real ids pass through untouched."""
