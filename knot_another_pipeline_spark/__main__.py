@@ -245,8 +245,11 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 print(f"compacted {args.path} -> {n} files")
         elif args.cmd == "prep-corpus":
-            from pyspark.sql import functions as F
+            from pyspark.sql import Observation, functions as F
 
+            from knot_another_pipeline_spark.functions.partitioning import (
+                fan_out_small_scan,
+            )
             from knot_another_pipeline_spark.operators.dedup import exact_dedup
             from knot_another_pipeline_spark.operators.sampling import (
                 assign_shards,
@@ -258,42 +261,48 @@ def main(argv: list[str] | None = None) -> int:
                 scrub_pii,
             )
 
-            docs = _load_documents(spark, args.input)
-            # line-clean then PII-scrub BEFORE scoring: quality verdicts
-            # and fingerprints must see the text that will be trained on
+            # The input is read once. A one-row-group input scans as one
+            # task, so it fans out before the interpreted line-cleaning
+            # HOFs and the PII regexes run. Line-clean then PII-scrub
+            # BEFORE scoring: quality verdicts and fingerprints must see
+            # the text that will be trained on. The cleaned corpus is
+            # pinned: the verdict, the kept join and the dedup all read
+            # the pin instead of re-running the text chain over the input.
+            docs = fan_out_small_scan(_load_documents(spark, args.input))
             cleaned = clean_lines(
                 docs, id_col="doc_id", text_col="text", min_words=args.min_line_words
             ).select("id", "text")
-            scrubbed = scrub_pii(cleaned, id_col="id", text_col="text")
-            docs = scrubbed.select(F.col("id").alias("doc_id"), "text")
+            docs = (
+                scrub_pii(cleaned, id_col="id", text_col="text")
+                .select(F.col("id").alias("doc_id"), "text")
+                .localCheckpoint()
+            )
             verdict = quality_filter(
                 docs, id_col="doc_id", text_col="text",
                 min_tokens=args.min_tokens,
             )
-            kept_tok = verdict.filter(F.col("keep")).select("id", "n_tokens")
+            # one inner join keeps the passing documents and carries
+            # their n_tokens along
             kept = docs.join(
-                kept_tok.select(F.col("id").alias("doc_id")), "doc_id",
-                "left_semi",
+                verdict.filter(F.col("keep")).select(
+                    F.col("id").alias("doc_id"), "n_tokens"
+                ),
+                "doc_id",
             )
             reps = exact_dedup(kept, id_col="doc_id", text_col="text").filter(
                 F.col("representative")
             ).select(F.col("id").alias("doc_id"))
-            # one kept∩reps set, n_tokens carried along — shard assignment
-            # reuses it instead of re-running the dedup chain
-            final = (
-                kept.join(reps, "doc_id", "left_semi")
-                .join(
-                    kept_tok.select(
-                        F.col("id").alias("doc_id"), "n_tokens"
-                    ),
-                    "doc_id",
-                )
-            )
             weights = {
                 name: int(w)
                 for name, w in (kv.split(":") for kv in args.splits.split(","))
             }
-            final = split_by_hash(final, id_col="doc_id", weights=weights)
+            # Pinned again: shard assignment's id-bounds job and its
+            # totals, and the final join with the shards, all read the
+            # deduped, split corpus.
+            final = split_by_hash(
+                kept.join(reps, "doc_id", "left_semi"),
+                id_col="doc_id", weights=weights,
+            ).localCheckpoint()
             # shard numbering restarts per split: shards land under
             # partitionBy('split') directories, so each split's shards
             # must independently fill ~tokens_per_shard (a global
@@ -307,18 +316,19 @@ def main(argv: list[str] | None = None) -> int:
                 tokens_per_shard=args.tokens_per_shard,
                 group_col="split",
             ).select(F.col("id").alias("doc_id"), "shard")
-            final = final.join(shards, "doc_id")
+            # the write counts its own rows: no read-back job
+            written = Observation("prepared")
+            final = final.join(shards, "doc_id").observe(
+                written, F.count(F.lit(1)).alias("docs")
+            )
             writer = final.write.mode("overwrite").partitionBy("split")
             if args.format == "jsonl":
                 # spark's json source IS jsonl (one object per line);
                 # gzip keeps shard files network-friendly
                 writer.option("compression", "gzip").json(args.output)
-                reader = spark.read.schema(final.schema).json(args.output)
             else:
                 writer.parquet(args.output)
-                reader = spark.read.schema(final.schema).parquet(args.output)
-            # explicit schema: an all-filtered corpus writes no footers
-            n = reader.count()
+            n = written.get["docs"]
             print(f"prepared corpus written to {args.output} ({n} docs)")
         elif args.cmd == "tokenize":
             import os

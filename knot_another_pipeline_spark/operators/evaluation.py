@@ -980,6 +980,29 @@ def conformal_threshold(
     )
 
 
+def _pin_without_stats(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=False)`` that forgets ``df``'s size
+    estimate.
+
+    A local checkpoint keeps its plan's estimated ``sizeInBytes``, and
+    without CBO an inner join estimates the PRODUCT of its inputs'
+    sizes. An iterate joined twice per round therefore squares its own
+    estimate every round: the estimate's digit count doubles, and by
+    ~18 rounds the optimizer spends minutes on big-integer arithmetic.
+    Re-wrapping the pinned rows as a fresh relation resets the estimate
+    to the session default. Where the JVM handle is unavailable (Spark
+    Connect) the plain pin is returned.
+    """
+    pinned = df.localCheckpoint(eager=False)
+    spark = df.sparkSession
+    try:
+        jdf = pinned._jdf
+        jspark = spark._jsparkSession
+    except AttributeError:
+        return pinned
+    return DataFrame(jspark.createDataFrame(jdf.rdd(), jdf.schema()), spark)
+
+
 def bradley_terry(
     matches: DataFrame,
     *,
@@ -1081,10 +1104,9 @@ def bradley_terry(
         # Round-pin the C-row iterate (the kmeans/pagerank contract):
         # without it each MM round nests the previous round's joins, so
         # plan depth — and analysis time — grows with ``iterations``.
-        s = (
+        s = _pin_without_stats(
             s.crossJoin(F.broadcast(mean))
             .select("item", (F.col("s") / F.col("_m")).alias("s"))
-            .localCheckpoint(eager=False)
         )
     return (
         items.join(s, "item")

@@ -29,10 +29,11 @@ def reconciliation_report(
     and SUM(source_row_count) must reconcile to the silver row count that
     survived the filters; row counts must be positive.
     """
+    # SUM over no rows is NULL; an empty rollup reconciles to 0.
     agg = hourly.agg(
         F.count(F.lit(1)).alias("rows"),
-        F.sum("message_count").alias("msg"),
-        F.sum("source_row_count").alias("src"),
+        F.coalesce(F.sum("message_count"), F.lit(0)).alias("msg"),
+        F.coalesce(F.sum("source_row_count"), F.lit(0)).alias("src"),
     ).collect()[0]
     pair_rows = pairs.count()
     checks = [
@@ -67,7 +68,7 @@ def reconciliation_report(
         )
     return spark.createDataFrame(
         [
-            (name, int(obs or 0), int(exp), int(obs or 0) - int(exp), bool(ok))
+            (name, int(obs), int(exp), int(obs) - int(exp), bool(ok))
             for name, obs, exp, ok in checks
         ],
         "check_name string, observed long, expected long, delta long, passed boolean",

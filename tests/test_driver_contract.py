@@ -202,8 +202,12 @@ def test_scale_probe_tool_smoke(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(scale_probe, "SF_DIR", "/root/testdata/sf0.001")
     monkeypatch.setattr(scale_probe, "WORK", str(tmp_path / "probe"))
     out = tmp_path / "probe.json"
+    # one timed sample per (op, factor): the tool still runs its untimed
+    # warmups, and repeated samples re-run identical plans
     monkeypatch.setattr(
-        sys, "argv", ["scale_probe.py", "--factors=1,2", f"--out={out}"]
+        sys,
+        "argv",
+        ["scale_probe.py", "--factors=1,2", "--samples=1", f"--out={out}"],
     )
     scale_probe.main()
     doc = json.loads(out.read_text())
@@ -211,5 +215,6 @@ def test_scale_probe_tool_smoke(spark, tmp_path, monkeypatch):
     assert set(doc["ops"]) == set(scale_probe.OPS_ALL)
     for op, r in doc["ops"].items():
         assert set(r["sec"]) == {"1", "2"}, op
+        assert all(len(v) == 1 for v in r["samples"].values()), op
         assert isinstance(r["loglog_slope"], float), op
     assert doc["input_rows"]["2"]["events"] == 2 * doc["input_rows"]["1"]["events"]
