@@ -1452,10 +1452,15 @@ def cohens_kappa(
     into a single exchange that every downstream aggregate reuses
     (the old shape's three direct aggregates each re-instantiated the
     upstream; measured two ~1.4 s duplicate jobs on label_agreement's
-    detect-language chain).  The marginals and totals are re-aggregates
+    detect-language chain).  The initial physical plan holds that
+    exchange once per consumer (``obs``, ``ma``, ``mb``), so a static
+    census such as tools/plan_shapes.py counts it three times; at run
+    time AQE executes it once and the other two are
+    ``ReusedExchange``.  The marginals and totals are re-aggregates
     of the C²-row table; all intermediate counts are exact integers
     (≤2⁵³) so sums are order-independent and the output is
-    bit-identical to the three-pass form.  Rows where either label is
+    bit-identical to the three-pass form, including on empty input
+    (``n = 0``, the three ratios NULL).  Rows where either label is
     NULL are dropped (abstentions are a coverage question, not an
     agreement question).  Perfect chance agreement (``p_e = 1``: both
     raters constant on the same label) leaves kappa undefined → NULL.
@@ -1469,7 +1474,9 @@ def cohens_kappa(
     # contingency table: C_a × C_b rows, bounded by label cardinality
     ct = s.groupBy("_a", "_b").agg(F.count(F.lit(1)).alias("_cnt"))
     obs = ct.agg(
-        F.sum("_cnt").cast("double").alias("_n"),
+        # n counts rows, so it is 0 (not the NULL of a SUM over no rows);
+        # _agree stays NULL there, so the ratios are NULL, not 0.0/0.0
+        F.coalesce(F.sum("_cnt"), F.lit(0)).cast("double").alias("_n"),
         F.sum(
             F.when(F.col("_a") == F.col("_b"), F.col("_cnt")).otherwise(
                 F.lit(0)

@@ -133,6 +133,22 @@ def test_kappa_drops_null_labels(spark):
     assert row["n"] == 2
 
 
+def test_kappa_empty_and_all_null_input(spark):
+    """No labelled pair: n is 0 (as the three-pass COUNT gave), and the
+    three ratios are undefined, so NULL."""
+    empty = spark.createDataFrame([], "a string, b string")
+    all_null = spark.createDataFrame(
+        [("x", None), (None, "y"), (None, None)], "a string, b string"
+    )
+    for df in (empty, all_null):
+        rows = cohens_kappa(df, rater_a="a", rater_b="b").collect()
+        assert len(rows) == 1
+        assert rows[0]["n"] == 0
+        assert rows[0]["p_observed"] is None
+        assert rows[0]["p_expected"] is None
+        assert rows[0]["kappa"] is None
+
+
 # ---------------------------------------------------------------------------
 # uplift_table
 # ---------------------------------------------------------------------------
