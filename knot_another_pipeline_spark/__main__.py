@@ -143,15 +143,6 @@ def main(argv: list[str] | None = None) -> int:
             print(f"silver written to {args.output}")
         elif args.cmd == "refresh":
             from knot_another_pipeline_spark.plans.gold_refresh import refresh_gold
-            from knot_another_pipeline_spark.schema import (
-                ID_ALIASES,
-                LAT_ALIASES,
-                LON_ALIASES,
-                SOG_ALIASES,
-                TIMESTAMP_ALIASES,
-                resolve_column,
-            )
-
             from knot_another_pipeline_spark.sources.ingest import read_silver
 
             days = args.days.split(",") if args.days else None
@@ -170,12 +161,8 @@ def main(argv: list[str] | None = None) -> int:
                 output_root=args.output,
                 mode=args.mode,
                 days=days,
-                uid_col=resolve_column(silver, *ID_ALIASES) or "mmsi",
-                ts_col=resolve_column(silver, "event_ts", *TIMESTAMP_ALIASES)
-                or "event_ts",
-                lat_col=resolve_column(silver, *LAT_ALIASES) or "latitude",
-                lon_col=resolve_column(silver, *LON_ALIASES) or "longitude",
-                sog_col=resolve_column(silver, *SOG_ALIASES) or "sog",
+                uid_col="mmsi", ts_col="event_ts",
+                lat_col="lat", lon_col="lon", sog_col="sog",
                 run_checks=not args.no_checks,
                 min_shared_cells=args.min_shared_cells,
             )
@@ -193,24 +180,11 @@ def main(argv: list[str] | None = None) -> int:
                     return 1
         elif args.cmd == "export-tracks":
             from knot_another_pipeline_spark.operators.tracks import export_tracks
-            from knot_another_pipeline_spark.schema import (
-                ID_ALIASES,
-                LAT_ALIASES,
-                LON_ALIASES,
-                TIMESTAMP_ALIASES,
-                resolve_column,
-            )
-
             from knot_another_pipeline_spark.sources.ingest import read_silver
 
-            silver = read_silver(spark, args.silver)
             out = export_tracks(
-                silver,
-                uid_col=resolve_column(silver, *ID_ALIASES) or "mmsi",
-                ts_col=resolve_column(silver, "event_ts", *TIMESTAMP_ALIASES)
-                or "event_ts",
-                lat_col=resolve_column(silver, *LAT_ALIASES) or "latitude",
-                lon_col=resolve_column(silver, *LON_ALIASES) or "longitude",
+                read_silver(spark, args.silver),
+                uid_col="mmsi", ts_col="event_ts", lat_col="lat", lon_col="lon",
                 uids=args.uids.split(","),
                 start=args.start,
                 stop=args.stop,

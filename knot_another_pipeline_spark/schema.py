@@ -1,4 +1,4 @@
-"""Schema helpers: case-insensitive column resolution and name normalization.
+"""Schema helpers: the silver contract, column resolution, name normalization.
 
 The reference resolves timestamp/bucket columns case-insensitively with
 fallback alias lists (``/root/reference/pipelines/ais_pipeline.py:44-60,
@@ -13,6 +13,7 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DoubleType, StringType
 
 #: Default alias ladders, mirroring ais_pipeline.py:44-60.
 TIMESTAMP_ALIASES = (
@@ -30,6 +31,20 @@ ID_ALIASES = ("mmsi", "uid", "vessel_id", "user_id", "id")
 LAT_ALIASES = ("latitude", "lat", "y")
 LON_ALIASES = ("longitude", "lon", "lng", "x")
 SOG_ALIASES = ("sog", "speed", "speed_over_ground")
+
+#: Silver's typed columns, declared once: canonical name (NOAA's header,
+#: snake_cased), Spark type, and the alias ladder ``to_silver`` finds it
+#: by. ``base_date_time`` stays the raw string; ``event_ts`` is parsed
+#: from it. Every other column reaches silver as a string.
+SILVER_COLUMNS: tuple[tuple[str, DataType, tuple[str, ...]], ...] = (
+    ("mmsi", StringType(), ID_ALIASES),
+    ("base_date_time", StringType(), TIMESTAMP_ALIASES),
+    ("lat", DoubleType(), LAT_ALIASES),
+    ("lon", DoubleType(), LON_ALIASES),
+    ("sog", DoubleType(), SOG_ALIASES),
+    ("cog", DoubleType(), ("cog",)),
+    ("heading", DoubleType(), ("heading",)),
+)
 
 
 def resolve_column(df: DataFrame, *candidates: str) -> str | None:

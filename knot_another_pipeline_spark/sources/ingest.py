@@ -16,6 +16,10 @@ zip archives (not a Hadoop codec) demux through ``binaryFile`` +
 Catalyst pushes projection into the scan and the whole ingest runs
 parallel per file split — the reference processes chunks sequentially on
 one core.
+
+Both readers read every column as a string; :func:`to_silver` types them
+against one declared contract (``schema.SILVER_COLUMNS``), as the
+reference pins its CSV dtypes, so silver's types never follow a file's values.
 """
 
 from __future__ import annotations
@@ -30,22 +34,21 @@ from pyspark.sql.types import StringType, StructField, StructType
 from knot_another_pipeline_spark.functions.hashing import hash64, stable_bucket
 from knot_another_pipeline_spark.functions.timestamps import normalize_timestamp
 from knot_another_pipeline_spark.schema import (
-    ID_ALIASES,
-    TIMESTAMP_ALIASES,
+    SILVER_COLUMNS,
     normalize_columns,
     resolve_column,
+    snake_case,
 )
 
 
 def read_csv_auto(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed CSV read with header + schema inference; handles plain
-    and ``.zst`` files transparently (built-in Hadoop codec)."""
-    return spark.read.csv(path, header=True, inferSchema=True)
+    """Distributed CSV read with a header, every column a string; handles
+    plain and ``.zst`` files transparently (built-in Hadoop codec). No
+    type inference: it costs a second scan, and :func:`to_silver` types."""
+    return spark.read.csv(path, header=True)
 
 
-def read_zip_csv(
-    spark: SparkSession, path: str, *, columns: list[str] | None = None
-) -> DataFrame:
+def read_zip_csv(spark: SparkSession, path: str) -> DataFrame:
     """ZIP-archive CSV ingest (S6): Spark has no zip codec, so archives
     load as ``binaryFile`` rows and each executor demuxes its archives'
     members with mapInPandas — all columns read as string (the reference
@@ -54,8 +57,6 @@ def read_zip_csv(
     At scale each archive is one task — parallelism is per-archive, which
     matches the reference's per-file loop but runs them concurrently.
     """
-    from knot_another_pipeline_spark.schema import snake_case
-
     bin_df = spark.read.format("binaryFile").load(path)
 
     # Schema discovery: peek at the first member on the driver (cheap —
@@ -73,11 +74,7 @@ def read_zip_csv(
             import pandas as pd
 
             head = pd.read_csv(io.TextIOWrapper(fh, encoding="utf-8"), nrows=0)
-    data_cols = [
-        snake_case(c)
-        for c in head.columns
-        if columns is None or c in columns or snake_case(c) in columns
-    ]
+    data_cols = [snake_case(c) for c in head.columns]
 
     def demux(it: Iterator) -> Iterator:
         import pandas as pd
@@ -116,21 +113,29 @@ def to_silver(
     drop_unparsable: bool = True,
 ) -> DataFrame:
     """Normalize a raw AIS-shaped DataFrame to the silver contract
-    (FIXTURES.md F2): snake_case names, resolved uid/timestamp columns,
-    parsed UTC ``event_ts``, lineage columns, partition keys
-    (year/month/day from the *record* timestamp) and the stable
-    ``bucket_id``.
+    (``docs/data_contracts.md``): each declared column found by its alias
+    ladder, renamed and ``try_cast`` (junk and absent columns → typed
+    NULL), other columns snake_cased strings, parsed UTC ``event_ts``,
+    lineage, partition keys (year/month/day from the *record* timestamp)
+    and the stable ``bucket_id``.
     """
     normalized = normalize_columns(df)
-    uid_col = resolve_column(normalized, *ID_ALIASES)
-    ts_col = resolve_column(normalized, *TIMESTAMP_ALIASES)
-    if uid_col is None or ts_col is None:
+    hits = {n: resolve_column(normalized, *a) for n, _, a in SILVER_COLUMNS}
+    if hits["mmsi"] is None or hits["base_date_time"] is None:
         raise ValueError(
             f"cannot resolve uid/timestamp columns in {normalized.columns}"
         )
+    declared = [
+        (F.col(hits[n]).try_cast(t) if hits[n] else F.lit(None).cast(t)).alias(n)
+        for n, t, _ in SILVER_COLUMNS
+    ]
+    taken = {*hits, *hits.values()}
+    rest = [
+        F.col(c).cast("string").alias(c) for c in normalized.columns if c not in taken
+    ]
     out = (
-        normalized.withColumn("mmsi", F.col(uid_col).cast("string"))
-        .withColumn("event_ts", normalize_timestamp(ts_col))
+        normalized.select(*declared, *rest)
+        .withColumn("event_ts", normalize_timestamp("base_date_time"))
         .withColumn(
             "source_file",
             F.col("source_file")
@@ -208,16 +213,16 @@ def to_documents(
 def read_silver(spark: SparkSession, root: str) -> DataFrame:
     """Silver read-back with schema-drift merge.
 
-    NOAA file generations drift (``docs/data_contracts.md:31`` — Arrow
-    infers types per file, so columns appear/disappear between
-    generations); the reference's Glue crawler opts into
-    ``CombineCompatibleSchemas``
-    (``infra/terraform/ais_glue_catalog/main.tf:120``). ``mergeSchema``
-    is the Spark equivalent: the read unions all part-file footers, so a
-    column added in a later generation is visible (NULL for older files)
-    instead of silently vanishing when the sampled footer predates it.
-    Footer merging is metadata-only — a distributed schema-merge job at
-    scale, no data read — so the option is safe to keep on for silver.
+    The declared columns (``schema.SILVER_COLUMNS``) hold one type in
+    every silver file, so they always merge. ``mergeSchema`` stays for
+    the undeclared ones, all strings: NOAA file generations add and drop
+    columns (``docs/data_contracts.md:31``), and the reference's Glue
+    crawler opts into ``CombineCompatibleSchemas``
+    (``infra/terraform/ais_glue_catalog/main.tf:120``). The read unions
+    all part-file footers, so a column added in a later generation is
+    visible (NULL for older files) instead of silently vanishing when the
+    sampled footer predates it. Footer merging is metadata-only — a
+    distributed schema-merge job at scale, no data read.
     """
     return spark.read.option("mergeSchema", "true").parquet(root)
 

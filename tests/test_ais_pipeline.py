@@ -630,6 +630,118 @@ def test_cli_end_to_end(spark, tmp_path):
     assert "222000222" not in content
 
 
+def _noaa_day(day: int, *, iso=False, heading="90", junk=None) -> list[list[str]]:
+    """Four NOAA-shaped rows of one day: two co-moving vessels, two hours.
+    ``junk = (row, field, value)`` overwrites one field."""
+    sep = "T" if iso else " "
+    rows = [
+        [uid, f"2025-01-0{day}{sep}0{h}:{m}:00", f"{10.0 + h}", f"{20.0 + h}",
+         "5.0", "45.0", heading]
+        for h in (0, 1)
+        for uid, m in (("111000111", 10), ("222000222", 20))
+    ]
+    if junk:
+        row, field, value = junk
+        rows[row][field] = value
+    return rows
+
+
+def _noaa_csv(rows, header="MMSI,BaseDateTime,LAT,LON,SOG,COG,Heading") -> bytes:
+    return "\n".join([header] + [",".join(r) for r in rows]).encode() + b"\n"
+
+
+def _write_day(path, body: bytes) -> None:
+    """Write a day as NOAA ships it: ``.csv.zst`` (a zstd frame, the way
+    ``perfbench/gen.py`` writes it), ``.zip`` or plain ``.csv``."""
+    import io
+    import zipfile
+
+    import pyarrow as pa
+
+    if path.name.endswith(".zst"):
+        body = pa.compress(body, codec="zstd", asbytes=True)
+    elif path.suffix == ".zip":
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as zf:
+            zf.writestr(path.stem + ".csv", body)
+        body = buf.getvalue()
+    path.write_bytes(body)
+
+
+_MIXED_SILVER = {
+    # (file name, CSV body) per day; rows kept; 111000111's rows kept
+    "zst_and_zip": (
+        [("d1.csv.zst", _noaa_csv(_noaa_day(1))),
+         ("d2.zip", _noaa_csv(_noaa_day(2), "Mmsi,BASEDATETIME,Lat,Lon,Sog,Cog,Heading"))],
+        8, 4,
+    ),
+    "inference_divergent_csv": (
+        [("d1.csv", _noaa_csv(_noaa_day(1, iso=True))),
+         ("d2.csv", _noaa_csv(
+             _noaa_day(2, heading="90.5", junk=(1, 1, "not-a-date"))))],
+        7, 4,
+    ),
+    # LAT=abc on 111000111's second message
+    "junk_lat": ([("d1.csv", _noaa_csv(_noaa_day(1, junk=(2, 2, "abc"))))], 3, 1),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MIXED_SILVER))
+def test_cli_end_to_end_mixed_silver(spark, tmp_path, case):
+    """ingest → refresh → export-tracks over one silver root whose days
+    differ in archive format, in the values type inference would see, or
+    hold a non-numeric coordinate: every silver file carries the declared
+    types, so the root reads back, junk is coerced to NULL and dropped,
+    and DQ passes."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from knot_another_pipeline_spark.__main__ import main
+    from knot_another_pipeline_spark.schema import SILVER_COLUMNS
+
+    days, kept, kept_111 = _MIXED_SILVER[case]
+    silver = tmp_path / "silver"
+    gold = tmp_path / "gold"
+    out_csv = tmp_path / "tracks.csv"
+    for name, body in days:
+        _write_day(tmp_path / name, body)
+        assert main(["ingest", "--input", str(tmp_path / name),
+                     "--output", str(silver)]) == 0
+
+    declared = {name: dtype.simpleString() for name, dtype, _ in SILVER_COLUMNS}
+    files = glob.glob(f"{silver}/**/*.parquet", recursive=True)
+    assert files
+    for f in files:
+        schema = pq.read_schema(f)
+        assert {n: str(schema.field(n).type) for n in declared} == declared, f
+
+    assert main(["refresh", "--silver", str(silver), "--output", str(gold),
+                 "--min-shared-cells", "0"]) == 0
+    hourly = spark.read.parquet(str(gold / "uid_hourly_h3"))
+    assert hourly.agg(F.sum("message_count")).first()[0] == kept
+    assert main(["export-tracks", "--silver", str(silver),
+                 "--uids", "111000111", "--output", str(out_csv)]) == 0
+    assert out_csv.read_text().count("111000111") == kept_111
+
+
+def test_cli_ingest_reads_csv_without_inference_scan(spark, tmp_path):
+    """A plain-CSV ingest runs two jobs, the header read and the silver
+    write: no schema-inference job scans the input a second time."""
+    from knot_another_pipeline_spark.__main__ import main
+
+    csv = tmp_path / "day.csv"
+    _write_day(csv, _noaa_csv(_noaa_day(1)))
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-ingest-csv", "cli ingest of one plain CSV")
+    try:
+        assert main(["ingest", "--input", str(csv),
+                     "--output", str(tmp_path / "silver")]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cli-ingest-csv")) == 2
+
+
 def test_refresh_gold_catalog_tables(spark, tmp_path):
     """catalog_tables=True writes the reference's bucketed layouts; the
     hourly table then self-joins on mmsi without a shuffle."""

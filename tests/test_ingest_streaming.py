@@ -5,6 +5,7 @@ from __future__ import annotations
 import io
 import os
 import zipfile
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,6 +73,31 @@ def test_zip_ingest(spark, tmp_path):
     silver = to_silver(raw)
     uids = {r["mmsi"] for r in silver.collect()}
     assert uids == {"111000111", "222000222", "444000444"}
+
+
+def test_to_silver_types_an_already_typed_frame(spark):
+    """A frame with typed columns (what read_silver's drift test feeds)
+    gets the declared types too: declared columns renamed and cast, a
+    missing one a typed NULL, undeclared ones strings."""
+    from knot_another_pipeline_spark.schema import SILVER_COLUMNS
+    from knot_another_pipeline_spark.sources.ingest import to_silver
+
+    typed = spark.createDataFrame(
+        [("111", datetime(2025, 1, 1, 0, 10), 10.0, 20.0, 5, 7)],
+        "MMSI string, BaseDateTime timestamp, Latitude double, Longitude double,"
+        " SOG int, Draft int",
+    )
+    silver = to_silver(typed)
+    dtypes = dict(silver.dtypes)
+    assert {n: dtypes[n] for n, _, _ in SILVER_COLUMNS} == {
+        n: t.simpleString() for n, t, _ in SILVER_COLUMNS
+    }
+    assert dtypes["draft"] == "string"
+    assert "latitude" not in dtypes and "longitude" not in dtypes
+    row = silver.first()
+    assert (row["lat"], row["lon"], row["sog"], row["heading"]) == (10.0, 20.0, 5.0, None)
+    assert row["event_ts"] == datetime(2025, 1, 1, 0, 10)
+    assert row["draft"] == "7"
 
 
 def test_silver_partitioned_write_roundtrip(spark, tmp_path):

@@ -14,11 +14,22 @@ Usage:
 
 from __future__ import annotations
 
+import calendar
 import json
 import os
 import sys
 import time
 import urllib.request
+from datetime import datetime
+
+
+def rest_epoch(stamp: str) -> float:
+    """Seconds since the epoch of a REST API time such as
+    ``2024-03-10T07:00:01.250GMT``. The time is UTC, so it goes through
+    ``calendar.timegm``; a local-time ``mktime`` would shift it by the
+    host's offset and skew a duration that spans a DST change."""
+    t = datetime.strptime(stamp.removesuffix("GMT"), "%Y-%m-%dT%H:%M:%S.%f")
+    return calendar.timegm(t.timetuple()) + t.microsecond / 1e6
 
 
 def main() -> None:
@@ -64,17 +75,8 @@ def main() -> None:
         print(f"\n=== {key}: wall {wall:.3f}s rows={n} ===")
         for j in new:
             try:
-                st = time.strptime(
-                    j["submissionTime"].split(".")[0], "%Y-%m-%dT%H:%M:%S"
-                )
-                ct = time.strptime(
-                    j["completionTime"].split(".")[0], "%Y-%m-%dT%H:%M:%S"
-                )
-                # sub-second precision from the GMT fractional parts
-                fs = float("0." + j["submissionTime"].split(".")[1][:3].rstrip("GMT"))
-                fc = float("0." + j["completionTime"].split(".")[1][:3].rstrip("GMT"))
-                dur = (time.mktime(ct) + fc) - (time.mktime(st) + fs)
-            except Exception:
+                dur = rest_epoch(j["completionTime"]) - rest_epoch(j["submissionTime"])
+            except (KeyError, ValueError):
                 dur = float("nan")
             total_job += dur if dur == dur else 0.0
             desc = (j.get("description") or j.get("name") or "")[:110]
