@@ -264,8 +264,8 @@ def _pairs_total_select(total: DataFrame) -> DataFrame:
 
 def q_pairs_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference `pairs_total` (A5): lifetime pair summary with exact
-    median (deterministic across engines; the reference's
-    approx_percentile variant is available via pairs_total(exact_median=False)).
+    median (deterministic across engines, where the reference takes
+    approx_percentile).
 
     Self-contained (recomputes the pairs chain) so the DuckDB oracle can
     mirror it from the raw tables. For the warehouse shape — aggregate
@@ -273,7 +273,7 @@ def q_pairs_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stage_pairs_daily`` + ``q_pairs_total_from_table`` (what
     plans/gold_refresh.py does, and what bench.py times)."""
     pairs = _pairs_base(spark, sf_dir)
-    return _pairs_total_select(pairs_total(pairs, exact_median=True))
+    return _pairs_total_select(pairs_total(pairs))
 
 
 def stage_pairs_daily(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -288,7 +288,7 @@ def q_pairs_total_from_table(spark: SparkSession, pairs_path: str) -> DataFrame:
     """`pairs_total` over a materialized pairs_daily table: times/costs
     only the lifetime aggregate, not a re-run of the upstream chain."""
     pairs = spark.read.parquet(pairs_path)
-    return _pairs_total_select(pairs_total(pairs, exact_median=True))
+    return _pairs_total_select(pairs_total(pairs))
 
 
 ORACLE_PAIRS_TOTAL = (

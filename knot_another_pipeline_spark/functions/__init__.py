@@ -7,8 +7,8 @@ h3-py encoding).
 """
 
 from knot_another_pipeline_spark.functions.timestamps import (  # noqa: F401
+    as_timestamp,
     normalize_timestamp,
-    to_utc_hour,
 )
 from knot_another_pipeline_spark.functions.geo import (  # noqa: F401
     grid_cell,

@@ -22,8 +22,9 @@ explicit format ladder — pure built-ins, codegen-friendly, no UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 # Normalized (space→T stripped back to space) candidate patterns, most
 # common first so the COALESCE short-circuits early on real data.
@@ -69,11 +70,13 @@ def normalize_timestamp(col: Column | str) -> Column:
     return F.when(has_zone, zoned).otherwise(plain)
 
 
-def to_utc_hour(ts: Column | str) -> Column:
-    """Top-of-hour truncation (`date_trunc('hour', …)`,
-    ``create_uid_hourly_h3.sql:58``)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_trunc("hour", c)
+def as_timestamp(df: DataFrame, col: str) -> Column:
+    """``df[col]`` as a TIMESTAMP, decided from the schema: a TIMESTAMP
+    column passes as is (silver's parsed ``event_ts``), anything else goes
+    through :func:`normalize_timestamp`."""
+    if isinstance(df.schema[col].dataType, TimestampType):
+        return F.col(col)
+    return normalize_timestamp(col)
 
 
 def partition_date(year, month, day):

@@ -964,9 +964,10 @@ def connected_components(
                         )
                         mid_obs.append(ob)
                 new_plan = cur
-                metric = F.sum(
-                    F.col("component").cast("decimal(38,0)")
-                ).alias("m")
+                metrics = [
+                    F.sum(F.col("component").cast("decimal(38,0)")).alias("m"),
+                    F.count(F.lit(1)).alias("n"),
+                ]
             else:
                 cur = labels.select(
                     "id", F.col("component").alias("_old"), "component"
@@ -978,14 +979,14 @@ def connected_components(
                     "component",
                     (F.col("component") != F.col("_old")).alias("_chg"),
                 )
-                metric = F.sum(F.col("_chg").cast("long")).alias("m")
+                metrics = [F.sum(F.col("_chg").cast("long")).alias("m")]
             # The convergence metric rides the SAME job as the round's
             # materialization via observe() (CollectMetrics): detecting
             # "no change" used to cost one extra read-back job per round
             # (and before that, a new-vs-old shuffle join); now the
             # write/checkpoint action itself reports it.
             obs = Observation(f"cc_{id(new_plan)}_{it}")
-            observed = new_plan.observe(obs, metric)
+            observed = new_plan.observe(obs, *metrics)
             if pin == "parquet":
                 slot = slots[it % 2]
                 observed.write.mode("overwrite").parquet(slot)
@@ -995,7 +996,8 @@ def connected_components(
                 pinned = spark.read.schema(new_plan.schema).parquet(slot)
             else:
                 pinned = observed.localCheckpoint(eager=True)
-            m = obs.get["m"]
+            observed_metrics = obs.get
+            m = observed_metrics["m"]
             new_labels = pinned.select("id", "component")
             if pin != "parquet":
                 new_ids = (
@@ -1009,12 +1011,14 @@ def connected_components(
             labels = new_labels
             _LAST_CC_ROUNDS = it + 1
             if numeric_ids:
+                if observed_metrics["n"] == 0:
+                    break  # an empty graph: no label to propagate
                 # labels are monotone non-increasing per node, so ANY
-                # two equal consecutive sums along the half-step chain
-                # — previous round's final, this round's mid-step
-                # probes, this round's final — certify a fixed point
-                # (exact in decimal; None==None covers the empty
-                # graph). Later steps of a converged round are
+                # two equal consecutive non-NULL sums along the
+                # half-step chain — previous round's final, this round's
+                # mid-step probes, this round's final — certify a fixed
+                # point (exact in decimal; a NULL sum is an overflow,
+                # never proof). Later steps of a converged round are
                 # identity maps, so the pinned state IS the fixpoint.
                 chain = (
                     ([prev_sum] if it > 0 else [])
@@ -1022,7 +1026,7 @@ def connected_components(
                     + [m]
                 )
                 if any(
-                    x == y for x, y in zip(chain, chain[1:])
+                    x is not None and x == y for x, y in zip(chain, chain[1:])
                 ):
                     break
                 prev_sum = m

@@ -92,7 +92,6 @@ def co_movement_pairs(
     cell_col: str = "cell",
     period: Column | str | None = None,
     min_shared_cells: int = 1,
-    assume_unique_windows: bool = True,
     max_entities_per_cell: int | None = None,
     pin_join_parallelism: bool = True,
 ) -> DataFrame:
@@ -102,15 +101,13 @@ def co_movement_pairs(
     hour-windows-grouped-by-day shape. Pass a coarser expression (e.g.
     ``F.trunc(window_col, 'month')``) for sparser data.
 
-    ``assume_unique_windows``: a *rollup* has one row per (entity,
-    window) by construction (it is the output of a groupBy on exactly
-    those keys — as the reference's ``uid_hourly_h3`` is). Under that
-    invariant every (pair, window) match occurs exactly once, so
-    ``hT = COUNT(*)`` — same value as the reference's
-    ``COUNT(DISTINCT hour)`` but without a second distinct aggregate,
-    which lets Spark skip the Expand (row-doubling) plan for
-    multi-distinct aggregation; only the cell-distinct remains. Pass
-    False if the input may carry duplicate (entity, window) rows.
+    The input must be a *rollup*: one row per (entity, window), as the
+    output of a groupBy on exactly those keys is (the reference's
+    ``uid_hourly_h3`` is). Under that invariant every (pair, window)
+    match occurs exactly once, so ``hT = COUNT(*)`` — same value as the
+    reference's ``COUNT(DISTINCT hour)`` but without a second distinct
+    aggregate, which lets Spark skip the Expand (row-doubling) plan for
+    multi-distinct aggregation; only the cell-distinct remains.
 
     ``max_entities_per_cell``: skew guard for the self-join. A cell-window
     with n entities emits n(n-1)/2 pairs — a single mega-cell (a port
@@ -196,14 +193,6 @@ def co_movement_pairs(
     # Under the unique-window invariant the post-join `w` column is never
     # aggregated (hT = COUNT(*)), so don't even project it — narrower
     # rows through the join → partial-agg pipeline.
-    out_cols = [
-        F.col("a.uid").alias("uid_a"),
-        F.col("b.uid").alias("uid_b"),
-        F.col("a.day_date").alias("day_date"),
-        F.col("a.cell").alias("cell"),
-    ]
-    if not assume_unique_windows:
-        out_cols.insert(3, F.col("a.w").alias("w"))
     co_located = a.join(
         b,
         (F.col("a.day_date") == F.col("b.day_date"))
@@ -211,14 +200,14 @@ def co_movement_pairs(
         & (F.col("a.cell") == F.col("b.cell"))
         & (F.col("a.uid") < F.col("b.uid")),
         "inner",
-    ).select(*out_cols)
-
-    return score_co_located(
-        co_located,
-        counted,
-        min_shared_cells=min_shared_cells,
-        assume_unique_windows=assume_unique_windows,
+    ).select(
+        F.col("a.uid").alias("uid_a"),
+        F.col("b.uid").alias("uid_b"),
+        F.col("a.day_date").alias("day_date"),
+        F.col("a.cell").alias("cell"),
     )
+
+    return score_co_located(co_located, counted, min_shared_cells=min_shared_cells)
 
 
 def score_co_located(
@@ -226,12 +215,10 @@ def score_co_located(
     base: DataFrame,
     *,
     min_shared_cells: int = 1,
-    assume_unique_windows: bool = True,
 ) -> DataFrame:
     """Day-grain pair scoring over an already-built co-located table.
 
-    ``co_located``: uid_a, uid_b, day_date, cell (plus ``w`` when
-    ``assume_unique_windows=False``) — the intermediate
+    ``co_located``: uid_a, uid_b, day_date, cell — the intermediate
     :func:`co_movement_pairs` builds with its self-join, or the streaming
     co-location log (``streaming.rollup_stream.read_co_location_log``)
     whose per-micro-batch joins produced the same rows incrementally.
@@ -241,51 +228,42 @@ def score_co_located(
     When ``base`` already carries ``win_cnt``/``geo_cnt`` (the windowed
     frame :func:`co_movement_pairs` pruned with) they are used as is.
     """
-    if assume_unique_windows:
-        # ONE explicit exchange on (pair, period), then BOTH aggregation
-        # levels run Complete-mode on top of it with no further shuffle:
-        # the repartition's HashPartitioning on (uid_a, uid_b, day_date)
-        # satisfies the 4-key group's ClusteredDistribution (partition
-        # keys ⊂ group keys) and the 3-key group's exactly.  Valid
-        # because under the unique-window invariant each (pair, window)
-        # match lands in exactly one cell, so summing per-cell match
-        # counts = total matches (= the reference's DISTINCT hour count).
-        #
-        # Why not let the two groupBys plan their own exchanges: the
-        # map-side partial for the 4-key aggregate runs INSIDE the
-        # self-join's tasks, and its hash-map state is bounded only by
-        # join output per task — at the 16× scale probe it capped every
-        # task's memory share (400 MB × 32), spilled 17 GiB, and spent
-        # 9.3 min in aggregation build, while the stage-2 partial built
-        # 5 GiB of maps to shrink 51.7 M rows by 1.4 % (pairs in
-        # different cells never combine).  The one-exchange form shuffles
-        # raw co-located rows (~3.8× more bytes here) but its reduce-side
-        # state is bounded by the PARTITION COUNT — the knob a deployment
-        # scales with data — and measured 2.0× faster end-to-end at 16×
-        # (7.6 s vs 15.6 s for the aggregation subchain) with zero spill.
-        # Re-enable map-side combine only when the network is the
-        # bottleneck AND the co-located/pairs ratio is high.
-        n_agg_part = _shuffle_partitions(co_located.sparkSession)
-        pair_day = (
-            co_located.repartition(
-                n_agg_part, "uid_a", "uid_b", "day_date"
-            )
-            .groupBy("uid_a", "uid_b", "day_date", "cell")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .groupBy("uid_a", "uid_b", "day_date")
-            .agg(
-                F.sum("_n").alias("hT"),
-                F.count(F.lit(1)).alias("gT"),
-            )
+    # ONE explicit exchange on (pair, period), then BOTH aggregation
+    # levels run Complete-mode on top of it with no further shuffle:
+    # the repartition's HashPartitioning on (uid_a, uid_b, day_date)
+    # satisfies the 4-key group's ClusteredDistribution (partition
+    # keys ⊂ group keys) and the 3-key group's exactly.  Valid
+    # because under the unique-window invariant each (pair, window)
+    # match lands in exactly one cell, so summing per-cell match
+    # counts = total matches (= the reference's DISTINCT hour count).
+    #
+    # Why not let the two groupBys plan their own exchanges: the
+    # map-side partial for the 4-key aggregate runs INSIDE the
+    # self-join's tasks, and its hash-map state is bounded only by
+    # join output per task — at the 16× scale probe it capped every
+    # task's memory share (400 MB × 32), spilled 17 GiB, and spent
+    # 9.3 min in aggregation build, while the stage-2 partial built
+    # 5 GiB of maps to shrink 51.7 M rows by 1.4 % (pairs in
+    # different cells never combine).  The one-exchange form shuffles
+    # raw co-located rows (~3.8× more bytes here) but its reduce-side
+    # state is bounded by the PARTITION COUNT — the knob a deployment
+    # scales with data — and measured 2.0× faster end-to-end at 16×
+    # (7.6 s vs 15.6 s for the aggregation subchain) with zero spill.
+    # Re-enable map-side combine only when the network is the
+    # bottleneck AND the co-located/pairs ratio is high.
+    n_agg_part = _shuffle_partitions(co_located.sparkSession)
+    pair_day = (
+        co_located.repartition(
+            n_agg_part, "uid_a", "uid_b", "day_date"
         )
-    else:
-        # With duplicate (entity, window) rows a pair can match the same
-        # window in two different cells, so per-cell distinct-w counts
-        # don't sum — fall back to the direct distinct aggregation.
-        pair_day = co_located.groupBy("uid_a", "uid_b", "day_date").agg(
-            F.countDistinct("w").alias("hT"),
-            F.countDistinct("cell").alias("gT"),
+        .groupBy("uid_a", "uid_b", "day_date", "cell")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .groupBy("uid_a", "uid_b", "day_date")
+        .agg(
+            F.sum("_n").alias("hT"),
+            F.count(F.lit(1)).alias("gT"),
         )
+    )
 
     # Per-entity per-period activity stats — built once, joined twice.
     if "geo_cnt" not in base.columns:
@@ -331,31 +309,22 @@ def score_co_located(
     )
 
 
-def pairs_total(
-    pairs_daily: DataFrame,
-    *,
-    gto_threshold: float = 0.4,
-    exact_median: bool = True,
-) -> DataFrame:
+def pairs_total(pairs_daily: DataFrame) -> DataFrame:
     """Lifetime pair summary (``sql/gold/create_pairs_total.sql:11-21``).
 
-    ``exact_median=True`` uses ``F.median`` (deterministic; matches any
-    exact-median oracle). ``False`` matches the reference literally with
-    ``approx_percentile(gto, 0.5)`` — cheaper at extreme scale, value may
-    differ in low digits.
+    ``median_gto`` is the exact ``F.median`` (deterministic; matches any
+    exact-median oracle), where the reference takes
+    ``approx_percentile(gto, 0.5)``.
     """
-    median_expr = (
-        F.median("gto") if exact_median else F.percentile_approx("gto", 0.5)
-    )
     return pairs_daily.groupBy("uid_a", "uid_b").agg(
         F.countDistinct("day_date").alias("total_days_observed"),
-        F.sum(
-            F.when(F.col("gto") >= F.lit(gto_threshold), 1).otherwise(0)
-        ).alias(f"days_with_gto_above_0_4"),
+        F.sum(F.when(F.col("gto") >= F.lit(0.4), 1).otherwise(0)).alias(
+            "days_with_gto_above_0_4"
+        ),
         F.max("gto").alias("max_gto"),
         F.min("gto").alias("min_gto"),
         F.avg("gto").alias("avg_gto"),
-        median_expr.alias("median_gto"),
+        F.median("gto").alias("median_gto"),
     )
 
 

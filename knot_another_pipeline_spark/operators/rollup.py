@@ -25,45 +25,10 @@ position (A2 in SURVEY §2.4) — one encode per entity-window, not per row.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, functions as F
 
 from knot_another_pipeline_spark.functions.geo import h3_cell, valid_coords
-from knot_another_pipeline_spark.functions.timestamps import normalize_timestamp
-
-
-def windowed_rollup(
-    df: DataFrame,
-    *,
-    uid_col: str,
-    ts_col: str,
-    window: str = "hour",
-    avg_cols: Sequence[str] = (),
-    cell_from: tuple[str, str] | None = None,
-    cell_res: int = 7,
-) -> DataFrame:
-    """Generic per-(uid, time-window) aggregate.
-
-    Output columns: ``uid``, ``window_ts``, ``avg_<c>`` for each of
-    ``avg_cols``, ``message_count``, ``source_row_count``, plus ``cell``
-    when ``cell_from=(lat_col, lon_col)`` names two of the averaged
-    columns.
-    """
-    uid = F.col(uid_col).cast("string").alias("uid")
-    window_ts = F.date_trunc(window, F.col(ts_col)).alias("window_ts")
-    aggs = [F.avg(c).alias(f"avg_{c}") for c in avg_cols]
-    aggs += [
-        F.count(F.lit(1)).alias("message_count"),
-        F.count(F.lit(1)).alias("source_row_count"),
-    ]
-    out = df.groupBy(uid, window_ts).agg(*aggs)
-    if cell_from is not None:
-        lat_c, lon_c = cell_from
-        out = out.withColumn(
-            "cell", h3_cell(F.col(f"avg_{lat_c}"), F.col(f"avg_{lon_c}"), cell_res)
-        )
-    return out
+from knot_another_pipeline_spark.functions.timestamps import as_timestamp
 
 
 def build_uid_hourly_h3(
@@ -74,20 +39,18 @@ def build_uid_hourly_h3(
     lat_col: str = "latitude",
     lon_col: str = "longitude",
     sog_col: str = "sog",
-    cell_res: int = 7,
-    parse_ts: bool = True,
 ) -> DataFrame:
     """Exact reference ``uid_hourly_h3`` schema (FIXTURES.md F3) from a
     silver-layer AIS DataFrame.
 
     Cleaning stage inlined per ``create_uid_hourly_h3.sql:27-55``: tiered
-    timestamp normalization, null-rejection on (uid, ts), try-cast
-    numerics, coordinate-validity filter. All filters are built-in
+    timestamp normalization (skipped for a column already typed
+    TIMESTAMP, such as silver's ``event_ts``), null-rejection on (uid,
+    ts), try-cast numerics, coordinate-validity filter. All filters are built-in
     predicates → pushed into the parquet scan where possible.
     """
-    ts = normalize_timestamp(ts_col) if parse_ts else F.col(ts_col)
     cleaned = (
-        silver.withColumn("event_ts", ts)
+        silver.withColumn("event_ts", as_timestamp(silver, ts_col))
         .withColumn("lat", F.col(lat_col).cast("double"))
         .withColumn("lon", F.col(lon_col).cast("double"))
         .withColumn("sog_d", F.col(sog_col).cast("double") if sog_col in silver.columns else F.lit(None).cast("double"))
@@ -106,7 +69,7 @@ def build_uid_hourly_h3(
             F.avg("sog_d").alias("avg_sog"),
             F.count(F.lit(1)).alias("source_row_count"),
         )
-        .withColumn("h3_index", h3_cell(F.col("avg_lat"), F.col("avg_lon"), cell_res))
+        .withColumn("h3_index", h3_cell(F.col("avg_lat"), F.col("avg_lon")))
         .withColumn("ingested_at", F.current_timestamp())
         .withColumn("dt", F.to_date("hour_ts"))
         .withColumn("hour", F.hour("hour_ts"))

@@ -8,29 +8,37 @@ dynamic partition overwrite: one job writes exactly the day partitions it
 recomputed, atomically per partition, and late-arriving days append by
 simply being present in the input.
 
-Single scan of silver. As in the reference (``:306-358``), the hourly
-table is materialized once and everything downstream reads what was
-written, never the silver → rollup chain again:
+Single scan of silver, one pin per gold table. As in the reference
+(``:306-358``), each table is materialized once and everything downstream
+reads it, never the silver → rollup chain again:
 
 1. silver (filtered to ``days`` first, so the rollup and the DQ count see
-   the same rows) → ``uid_hourly_h3``, written once. An ``Observation``
-   on that scan counts the silver rows that pass the rollup's filters:
-   the DQ expectation, in band, with no separate ``count()`` job.
-2. The write observes the days it covered and its ``ingested_at`` (one
-   ``current_timestamp`` literal per query). The read-back filters on
-   both, so it holds exactly this run's rows: dynamic overwrite keeps
-   other partitions, and append keeps earlier runs' rows of a day.
-3. ``pairs_daily`` is built from that read-back and written once;
+   the same rows) → ``uid_hourly_h3``, pinned with ``localCheckpoint()``.
+   An ``Observation`` on that scan counts the silver rows that pass the
+   rollup's filters: the DQ expectation, in band, with no separate
+   ``count()`` job.
+2. The hourly pin is written to ``uid_hourly_h3`` (with ``output_root``)
+   and feeds the pairs join, the trim count and the reconciliation, so
+   they see exactly this run's rows, whatever older partitions or
+   appended rows the table on disk holds.
+3. The pairs built from it are pinned too: the pin is written to
+   ``pairs_daily``, is the returned ``pairs`` and is what the DQ counts.
    ``pairs_total`` aggregates the whole ``pairs_daily`` read back.
-4. The trim count and the reconciliation run over the gold read-backs.
+4. The DQ report reads the two pins.
 
-Without ``output_root`` the hourly table is a local checkpoint instead,
-which serves the same one-materialization role.
+Runs with and without ``output_root`` and with ``catalog_tables`` share
+this flow; only the writes differ. A pin lives in executor block storage:
+if an executor that holds part of one dies, the refresh fails with an
+error naming the lost checkpoint block; it never recomputes or returns
+wrong rows.
 
-Measured with ``perfbench`` (``--trace 1``, ``gold_refresh`` seed 5,
-4-core host): silver scans 8 → 1, Spark jobs 40 → 33, refresh span
-20.6 s → 10.0 s, pairs join rows 3 831 580 → 1 180 (the pre-join prune in
-``co_movement_pairs``).
+Measured with ``perfbench`` (``--trace 1``, ``gold_refresh``, 4-core
+host): the single silver scan and the pre-join prune in
+``co_movement_pairs`` took seed 5 from 8 silver scans to 1, Spark jobs
+40 → 33, refresh span 20.6 s → 10.0 s and pairs join rows 3 831 580 →
+1 180. Reading the pins instead of filtered read-backs, with the DQ
+counting the pairs pin instead of re-running the join, then took seed 1
+from 33 jobs to 28 and its refresh span 8.05 s → 7.37 s.
 
 Scale story: the reference bounded each Athena query to one silver day
 partition to cap query size. Spark needs no such manual dicing — AQE
@@ -108,11 +116,12 @@ def refresh_gold(
       disables.
     """
     from knot_another_pipeline_spark.functions.geo import valid_coords
-    from knot_another_pipeline_spark.functions.timestamps import normalize_timestamp
+    from knot_another_pipeline_spark.functions.timestamps import as_timestamp
+    from knot_another_pipeline_spark.sources.warehouse import save_bucketed_table
 
     # Parse the timestamp once: the days filter, the DQ count and the
     # rollup all read the same column.
-    silver = silver.withColumn("_ts", normalize_timestamp(ts_col))
+    silver = silver.withColumn("_ts", as_timestamp(silver, ts_col))
     if days:
         # Filter silver, not hourly: the rollup and the observed DQ count
         # must see the same rows (dt = to_date(event_ts)).
@@ -137,55 +146,32 @@ def refresh_gold(
         lat_col=lat_col,
         lon_col=lon_col,
         sog_col=sog_col,
-        parse_ts=False,
-    )
+    ).localCheckpoint()
 
-    # The materialization observes which days it covered and the run's
-    # ingested_at (current_timestamp is one literal per query), so the
-    # read-back is exactly this run's rows: dynamic overwrite keeps other
-    # partitions, and append keeps earlier runs' rows of the same day.
-    written_obs = Observation("uid_hourly_h3")
-    hourly = hourly.observe(
-        written_obs,
-        F.collect_set("dt").alias("days"),
-        F.max(F.unix_micros("ingested_at")).alias("ingested_at"),
-    )
     written: dict[str, str] = {}
-    if output_root:
-        from knot_another_pipeline_spark.sources.warehouse import save_bucketed_table
+    write_mode = "overwrite" if mode == "replace" else "append"
 
-        write_mode = "overwrite" if mode == "replace" else "append"
-
-        def materialize(df, name, partition_by, **bucketing) -> DataFrame:
-            """Write ``df`` as gold table ``name``; return the whole table."""
-            path = written[name] = f"{output_root}/{name}"
-            if catalog_tables:
-                save_bucketed_table(
-                    df, name, partition_by=partition_by, mode=write_mode,
-                    path=path, **bucketing,
-                )
-                return spark.table(name)
+    def materialize(df, name, partition_by, **bucketing) -> None:
+        """Write ``df`` as gold table ``name`` under ``output_root``."""
+        if not output_root:
+            return
+        path = written[name] = f"{output_root}/{name}"
+        if catalog_tables:
+            save_bucketed_table(
+                df, name, partition_by=partition_by, mode=write_mode,
+                path=path, **bucketing,
+            )
+        else:
             df.write.mode(write_mode).partitionBy(*partition_by).parquet(path)
-            # Explicit schema: an empty run writes no parquet footers, so
-            # schema inference on the read-back would fail.
-            return spark.read.schema(df.schema).parquet(path)
 
-        stored = materialize(
-            hourly.withColumn("hour_part", F.col("hour")),
-            "uid_hourly_h3",
-            ("dt", "hour_part"),
-            bucket_by=("mmsi",),
-            num_buckets=64,
-            sort_by=("mmsi",),
-        )
-        run = written_obs.get
-        hourly = stored.filter(
-            F.col("dt").isin(run["days"])
-            & (F.col("ingested_at") == F.timestamp_micros(F.lit(run["ingested_at"])))
-        ).select(*hourly.columns)
-    else:
-        hourly = hourly.localCheckpoint()
-
+    materialize(
+        hourly.withColumn("hour_part", F.col("hour")),
+        "uid_hourly_h3",
+        ("dt", "hour_part"),
+        bucket_by=("mmsi",),
+        num_buckets=64,
+        sort_by=("mmsi",),
+    )
     pairs = co_movement_pairs(
         hourly.select(
             F.col("mmsi").alias("uid"),
@@ -197,8 +183,19 @@ def refresh_gold(
         cell_col="cell",
         min_shared_cells=min_shared_cells,
         max_entities_per_cell=max_entities_per_cell,
+    ).localCheckpoint()
+    daily = (
+        pairs.withColumn("year", F.year("day_date"))
+        .withColumn("month", F.month("day_date"))
+        .withColumn("day", F.dayofmonth("day_date"))
     )
-    totals = pairs_total(pairs)
+    materialize(
+        daily,
+        "pairs_daily",
+        ("year", "month", "day"),
+        bucket_by=("uid_a", "uid_b"),
+        num_buckets=32,
+    )
 
     if output_root:
         # The lifetime summary must aggregate the WHOLE materialized
@@ -208,16 +205,13 @@ def refresh_gold(
         # on-disk day partitions absent from this run's input, so even a
         # replace run can cover fewer days than the table holds. Cheap
         # relative to the refresh (one scan of the pre-built pairs table).
-        full_pairs = materialize(
-            pairs.withColumn("year", F.year("day_date"))
-            .withColumn("month", F.month("day_date"))
-            .withColumn("day", F.dayofmonth("day_date")),
-            "pairs_daily",
-            ("year", "month", "day"),
-            bucket_by=("uid_a", "uid_b"),
-            num_buckets=32,
+        # Explicit schema: an empty run writes no parquet footers, so
+        # schema inference on the read-back would fail.
+        totals = pairs_total(
+            spark.table("pairs_daily")
+            if catalog_tables
+            else spark.read.schema(daily.schema).parquet(written["pairs_daily"])
         )
-        totals = pairs_total(full_pairs)
         totals_path = written["pairs_total"] = f"{output_root}/pairs_total"
         if catalog_tables:
             totals.write.mode("overwrite").option("path", totals_path).saveAsTable(
@@ -225,6 +219,8 @@ def refresh_gold(
             )
         else:
             totals.write.mode("overwrite").parquet(totals_path)
+    else:
+        totals = pairs_total(pairs)
 
     report = None
     if run_checks:
@@ -244,7 +240,7 @@ def refresh_gold(
             # filters; AQE then drops the empty rollup's stages, and with
             # them the silver observation, so it is not read.
             silver_filtered_count=(
-                silver_obs.get["kept"] if written_obs.get["days"] else 0
+                0 if hourly.isEmpty() else silver_obs.get["kept"]
             ),
             hourly=hourly,
             pairs=pairs,

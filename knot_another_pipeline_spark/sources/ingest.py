@@ -36,7 +36,6 @@ from knot_another_pipeline_spark.functions.timestamps import normalize_timestamp
 from knot_another_pipeline_spark.schema import (
     SILVER_COLUMNS,
     normalize_columns,
-    resolve_column,
     snake_case,
 )
 
@@ -61,10 +60,10 @@ def read_zip_csv(spark: SparkSession, path: str) -> DataFrame:
 
     # Schema discovery: peek at the first member on the driver (cheap —
     # metadata-only listing + one member header). Member headers vary in
-    # spelling (FIXTURES.md F1), so everything normalizes to snake_case
-    # and later members reindex to the discovered schema (missing → NULL,
-    # extras dropped) — the same drift tolerance the reference's alias
-    # resolution provides.
+    # spelling (FIXTURES.md F1), so every member's header is snake_cased
+    # and its declared columns renamed to silver's names; each member then
+    # reindexes to the declared names plus the first member's other
+    # columns (missing → NULL, other extras dropped).
     sample = bin_df.select("content", "path").limit(1).collect()
     if not sample:
         raise FileNotFoundError(f"no zip files at {path}")
@@ -74,7 +73,14 @@ def read_zip_csv(spark: SparkSession, path: str) -> DataFrame:
             import pandas as pd
 
             head = pd.read_csv(io.TextIOWrapper(fh, encoding="utf-8"), nrows=0)
-    data_cols = [snake_case(c) for c in head.columns]
+    header = [snake_case(c) for c in head.columns]
+    first_hits = _alias_hits(header)
+    if "mmsi" not in first_hits or "base_date_time" not in first_hits:
+        raise ValueError(f"cannot resolve uid/timestamp columns in {header}")
+    declared = [n for n, _, _ in SILVER_COLUMNS]
+    data_cols = declared + [
+        c for c in header if c not in {*declared, *first_hits.values()}
+    ]
 
     def demux(it: Iterator) -> Iterator:
         import pandas as pd
@@ -90,6 +96,15 @@ def read_zip_csv(spark: SparkSession, path: str) -> DataFrame:
                                 io.TextIOWrapper(fh, encoding="utf-8"), dtype=str
                             )
                         part.columns = [snake_case(c) for c in part.columns]
+                        hits = _alias_hits(list(part.columns))
+                        # A declared name that lost to a better alias is
+                        # left out, as to_silver leaves it out.
+                        part = part.drop(
+                            columns=[
+                                c for c in declared if c in part.columns
+                                and c not in hits.values()
+                            ]
+                        ).rename(columns={h: n for n, h in hits.items()})
                         part = part.reindex(columns=data_cols)
                         part["source_member"] = member
                         part["source_file"] = row["path"]
@@ -105,35 +120,46 @@ def read_zip_csv(spark: SparkSession, path: str) -> DataFrame:
     return bin_df.select("content", "path").mapInPandas(demux, schema)
 
 
+def _alias_hits(header: list[str]) -> dict[str, str]:
+    """Each declared column (``schema.SILVER_COLUMNS``) found in a
+    snake_cased header → its first alias hit there."""
+    hits = {}
+    for name, _, aliases in SILVER_COLUMNS:
+        hit = next((a for a in aliases if a in header), None)
+        if hit is not None:
+            hits[name] = hit
+    return hits
+
+
 def to_silver(
     df: DataFrame,
     *,
     source_url: str | None = None,
     num_buckets: int = 96,
-    drop_unparsable: bool = True,
 ) -> DataFrame:
     """Normalize a raw AIS-shaped DataFrame to the silver contract
     (``docs/data_contracts.md``): each declared column found by its alias
     ladder, renamed and ``try_cast`` (junk and absent columns → typed
-    NULL), other columns snake_cased strings, parsed UTC ``event_ts``,
-    lineage, partition keys (year/month/day from the *record* timestamp)
+    NULL), other columns snake_cased strings, parsed UTC ``event_ts``
+    (rows without an id or a parsable timestamp dropped), lineage,
+    partition keys (year/month/day from the *record* timestamp)
     and the stable ``bucket_id``.
     """
     normalized = normalize_columns(df)
-    hits = {n: resolve_column(normalized, *a) for n, _, a in SILVER_COLUMNS}
-    if hits["mmsi"] is None or hits["base_date_time"] is None:
+    hits = _alias_hits(normalized.columns)
+    if "mmsi" not in hits or "base_date_time" not in hits:
         raise ValueError(
             f"cannot resolve uid/timestamp columns in {normalized.columns}"
         )
     declared = [
-        (F.col(hits[n]).try_cast(t) if hits[n] else F.lit(None).cast(t)).alias(n)
+        (F.col(hits[n]).try_cast(t) if n in hits else F.lit(None).cast(t)).alias(n)
         for n, t, _ in SILVER_COLUMNS
     ]
-    taken = {*hits, *hits.values()}
+    taken = {*(n for n, _, _ in SILVER_COLUMNS), *hits.values()}
     rest = [
         F.col(c).cast("string").alias(c) for c in normalized.columns if c not in taken
     ]
-    out = (
+    return (
         normalized.select(*declared, *rest)
         .withColumn("event_ts", normalize_timestamp("base_date_time"))
         .withColumn(
@@ -144,11 +170,8 @@ def to_silver(
         )
         .withColumn("source_url", F.lit(source_url))
         .withColumn("ingested_at", F.current_timestamp())
-    )
-    if drop_unparsable:
-        out = out.filter(F.col("mmsi").isNotNull() & F.col("event_ts").isNotNull())
-    return (
-        out.withColumn("year", F.year("event_ts"))
+        .filter(F.col("mmsi").isNotNull() & F.col("event_ts").isNotNull())
+        .withColumn("year", F.year("event_ts"))
         .withColumn("month", F.month("event_ts"))
         .withColumn("day", F.dayofmonth("event_ts"))
         .withColumn("bucket_id", stable_bucket(F.col("mmsi"), num_buckets))

@@ -499,6 +499,35 @@ def test_refresh_reads_silver_once(spark, tmp_path):
     assert seen.value == n
 
 
+def test_refresh_runs_pairs_join_once(spark, tmp_path, monkeypatch):
+    """A refresh with output and DQ checks produces each pair row exactly
+    once: the pairs_daily write and the DQ pair count read one pin
+    instead of running the pairs join again."""
+    from knot_another_pipeline_spark.plans import gold_refresh
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def bump(_):
+        seen.add(1)
+        return True
+
+    counting = F.udf(bump, "boolean").asNondeterministic()
+    join = gold_refresh.co_movement_pairs
+    monkeypatch.setattr(
+        gold_refresh,
+        "co_movement_pairs",
+        lambda *a, **kw: join(*a, **kw).filter(counting("uid_a")),
+    )
+    gold = str(tmp_path / "gold")
+    result = gold_refresh.refresh_gold(
+        spark, _ais_fixture(spark), output_root=gold, run_checks=True
+    )
+    assert all(r["passed"] for r in result.report.collect())
+    stored = spark.read.parquet(f"{gold}/pairs_daily").count()
+    assert stored > 0
+    assert seen.value == stored
+
+
 def test_refresh_days_dq_counts_only_those_days(spark, tmp_path):
     """A targeted rebuild filters silver, not hourly, so the observed
     silver count and the hourly sums cover the same day and DQ passes —

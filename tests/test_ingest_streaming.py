@@ -75,6 +75,31 @@ def test_zip_ingest(spark, tmp_path):
     assert uids == {"111000111", "222000222", "444000444"}
 
 
+def test_zip_later_member_keeps_declared_column(spark, tmp_path):
+    """A declared column that only a later member carries reaches
+    silver: the first member's header does not decide the declared
+    columns, and each member's aliases map to silver's names."""
+    from knot_another_pipeline_spark.sources.ingest import read_zip_csv, to_silver
+
+    zpath = tmp_path / "two_members.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr(
+            "a.csv", "MMSI,BaseDateTime,LAT,LON\n111,2025-01-01 00:10:00,10.0,20.0\n"
+        )
+        zf.writestr(
+            "b.csv",
+            "mmsi,BASEDATETIME,Latitude,Longitude,COG\n"
+            "222,2025-01-01 00:20:00,11.0,21.0,45.5\n",
+        )
+    rows = {
+        r["mmsi"]: r
+        for r in to_silver(read_zip_csv(spark, str(zpath))).collect()
+    }
+    assert rows["222"]["cog"] == 45.5
+    assert (rows["222"]["lat"], rows["222"]["lon"]) == (11.0, 21.0)
+    assert rows["111"]["cog"] is None and rows["111"]["lat"] == 10.0
+
+
 def test_to_silver_types_an_already_typed_frame(spark):
     """A frame with typed columns (what read_silver's drift test feeds)
     gets the declared types too: declared columns renamed and cast, a

@@ -60,6 +60,17 @@ def test_cc_mid_round_probe_breaks_without_confirm_round(spark):
     assert dedup._LAST_CC_ROUNDS == 1
 
 
+def test_cc_empty_graph_ends_after_one_round(spark):
+    """An empty pair frame has no label to propagate: the round's
+    observed row count ends the loop after one round, and no row comes
+    back. A NULL label sum alone is not taken as a fixpoint."""
+    from knot_another_pipeline_spark.operators import dedup
+
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert dedup.connected_components(pairs).collect() == []
+    assert dedup._LAST_CC_ROUNDS == 1
+
+
 def test_cc_generic_string_path_keeps_jumped_defaults(spark):
     """Non-numeric ids resolve to the jumped composition (grid graphs
     have genuine chains) and still produce exact components."""
