@@ -268,6 +268,12 @@ def ngram_jaccard_pairs(
     pairs are enumerated row-locally — the shingle strings shuffle
     once instead of riding both sides of a self-equi-join, and the
     pair stream goes straight into the (id_a, id_b) count aggregate.
+
+    The shingles are pinned with a lazy ``localCheckpoint`` that the
+    returned frame reads, so it cannot be freed when this returns: its
+    blocks stay in executor storage until the frame is dropped and the
+    ContextCleaner reclaims them, and a lost executor makes the result
+    fail (a missing checkpoint block), not recompute.
     Output: id_a, id_b, jaccard.
     """
     from knot_another_pipeline_spark.functions.postings import (
@@ -1731,7 +1737,10 @@ def containment_pairs(
     §2.3/§2.4).  Each undirected intersection is computed ONCE
     (``id < id`` pair orientation) and fanned into the two directed
     rows row-locally — the pair cost isn't paid twice for an
-    asymmetric measure.
+    asymmetric measure.  The shingle pin is the one
+    :func:`ngram_jaccard_pairs` documents: read by the returned frame,
+    reclaimed by the ContextCleaner, and not recomputable after
+    executor loss.
 
     Output: id_a, id_b (direction: containment OF id_a IN id_b),
     size_a, inter, containment — pairs with C ≥ ``min_containment``.

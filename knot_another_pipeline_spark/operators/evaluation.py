@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from knot_another_pipeline_spark.functions.pins import pin_without_stats
+
 __all__ = [
     "auc_scores",
     "average_precision",
@@ -980,29 +982,6 @@ def conformal_threshold(
     )
 
 
-def _pin_without_stats(df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint(eager=False)`` that forgets ``df``'s size
-    estimate.
-
-    A local checkpoint keeps its plan's estimated ``sizeInBytes``, and
-    without CBO an inner join estimates the PRODUCT of its inputs'
-    sizes. An iterate joined twice per round therefore squares its own
-    estimate every round: the estimate's digit count doubles, and by
-    ~18 rounds the optimizer spends minutes on big-integer arithmetic.
-    Re-wrapping the pinned rows as a fresh relation resets the estimate
-    to the session default. Where the JVM handle is unavailable (Spark
-    Connect) the plain pin is returned.
-    """
-    pinned = df.localCheckpoint(eager=False)
-    spark = df.sparkSession
-    try:
-        jdf = pinned._jdf
-        jspark = spark._jsparkSession
-    except AttributeError:
-        return pinned
-    return DataFrame(jspark.createDataFrame(jdf.rdd(), jdf.schema()), spark)
-
-
 def bradley_terry(
     matches: DataFrame,
     *,
@@ -1104,7 +1083,7 @@ def bradley_terry(
         # Round-pin the C-row iterate (the kmeans/pagerank contract):
         # without it each MM round nests the previous round's joins, so
         # plan depth — and analysis time — grows with ``iterations``.
-        s = _pin_without_stats(
+        s = pin_without_stats(
             s.crossJoin(F.broadcast(mean))
             .select("item", (F.col("s") / F.col("_m")).alias("s"))
         )

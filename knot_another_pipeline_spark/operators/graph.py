@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from knot_another_pipeline_spark.functions.pins import pin_without_stats
+
 __all__ = [
     "common_neighbor_scores",
     "community_quality",
@@ -111,7 +113,7 @@ def pagerank(
             )
         )
         if checkpoint_each:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin_without_stats(ranks)
     return ranks
 
 
@@ -625,8 +627,10 @@ def label_propagation(
         # three times by the NEXT round (vote join, already-labeled
         # anti-join, union), so an unpinned loop compiles to a 3^r-wide
         # plan whose subtrees re-execute. ``checkpoint_each`` remains
-        # honored as the (now-redundant) explicit opt-in.
-        labeled = labeled.unionByName(adopted).localCheckpoint(eager=False)
+        # honored as the (now-redundant) explicit opt-in. The pin drops
+        # the size estimate, which the vote join would otherwise
+        # multiply every round (``functions/pins.py``).
+        labeled = pin_without_stats(labeled.unionByName(adopted))
     return labeled
 
 
@@ -725,7 +729,7 @@ def personalized_pagerank(
             )
         )
         if checkpoint_each:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin_without_stats(ranks)
     return ranks
 
 

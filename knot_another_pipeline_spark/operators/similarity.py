@@ -829,9 +829,11 @@ def kmeans_step(
     ``(cent_id, centv)`` frame (a norm is derived if absent), e.g.
     ``prev.select(F.col("cell").alias("cent_id"),
     F.col("new_centroid").alias("centv"))``. Iterating = a loop of
-    these calls with ``localCheckpoint`` every few rounds (the
-    ``connected_components`` lineage lesson); within-cluster SSE is
-    non-increasing per Lloyd's guarantee (property-tested).
+    these calls that pins the fed-back centroids with
+    ``functions.pins.pin_without_stats`` (the ``connected_components``
+    lineage lesson; a plain ``localCheckpoint`` keeps a size estimate
+    that the centroid join multiplies every round); within-cluster SSE
+    is non-increasing per Lloyd's guarantee (property-tested).
 
     Scale shape per iteration: centroids broadcast (bounded —
     ``num_centroids`` is the dial, not corpus size); assignment is the

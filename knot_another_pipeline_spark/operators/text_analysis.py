@@ -953,6 +953,11 @@ def bpe_learn(
     ``kmeans_step``): n driver round-trips, never a corpus scan — the
     corpus is only read once by ``build_vocab`` to make ``words``.
 
+    Every pin is local to the call: the returned list reads none of
+    them, so once this returns the ContextCleaner reclaims their blocks.
+    A lost executor during the call fails it (a missing checkpoint
+    block); the pins cannot be recomputed.
+
     Returns [(rank, a, b, pair_count), ...] — feed the (a, b) list
     back into :func:`bpe_pair_counts` or an encoder.
     """

@@ -33,12 +33,25 @@ def export_tracks(
     The cohort filter is ``isin`` — Catalyst compiles small lists to an
     in-filter pushed into the parquet scan; a huge cohort should instead be
     a broadcast left-semi join (same semantics, SURVEY §2.3 J3).
+
+    On a silver frame (``event_ts`` plus its ``year/month/day`` partition
+    columns) a time window also bounds the day partitions, so the scan
+    lists only the days the window touches. ``to_silver`` derives those
+    columns from ``event_ts`` in UTC, and the bounds are the UTC days of
+    the window's instants, so the day filter drops no row the time filter
+    keeps.
     """
     uid = F.col(uid_col).cast("string")
     out = df.filter(uid.isin([str(u) for u in uids]))
     ts = F.col(ts_col)
     if start is not None and stop is not None:
         out = out.filter(ts.between(F.lit(start), F.lit(stop)))
+        if ts_col == "event_ts" and {"year", "month", "day"} <= set(df.columns):
+            out = out.filter(
+                F.make_date("year", "month", "day").between(
+                    _utc_day(start), _utc_day(stop)
+                )
+            )
     out = out.filter(
         valid_coords(F.col(lat_col).cast("double"), F.col(lon_col).cast("double"))
     )
@@ -48,6 +61,13 @@ def export_tracks(
         F.col(lat_col).cast("double").alias("latitude"),
         F.col(lon_col).cast("double").alias("longitude"),
     ).orderBy("event_ts", "uid")
+
+
+def _utc_day(bound):
+    """UTC calendar day of a window bound, whatever the session time zone:
+    the instant's epoch seconds floored to whole days."""
+    secs = F.lit(bound).cast("timestamp").cast("long")
+    return F.date_from_unix_date(F.floor(secs / 86400).cast("int"))
 
 
 def backfill_track_ids(df: DataFrame, id_col: str = "track_id") -> DataFrame:

@@ -528,6 +528,54 @@ def test_refresh_runs_pairs_join_once(spark, tmp_path, monkeypatch):
     assert seen.value == stored
 
 
+def _files_per_partition(root) -> dict[str, int]:
+    """Parquet data files per leaf partition directory under ``root``."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            out[os.path.relpath(d, root)] = n
+    return out
+
+
+def _rows(df, cols):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_refresh_writes_one_file_per_gold_partition(spark, tmp_path):
+    """Each gold partition is written as one file set sized by the write,
+    not by the pairs exchange upstream: a replace and then an append of a
+    new day leave exactly one parquet file per pairs_daily day and per
+    uid_hourly_h3 (dt, hour), holding the rows the refresh returned."""
+    from knot_another_pipeline_spark.plans.gold_refresh import refresh_gold
+
+    gold = str(tmp_path / "gold")
+    days = ("2025-01-01", "2025-01-02", "2025-01-03")
+    first = refresh_gold(
+        spark,
+        _port_silver(spark, days[0]).union(_port_silver(spark, days[1])),
+        output_root=gold, mode="replace", run_checks=False,
+    )
+    second = refresh_gold(
+        spark, _port_silver(spark, days[2]),
+        output_root=gold, mode="append", run_checks=False,
+    )
+    pairs_files = _files_per_partition(f"{gold}/pairs_daily")
+    assert pairs_files == {f"year=2025/month=1/day={d}": 1 for d in (1, 2, 3)}
+    hourly_files = _files_per_partition(f"{gold}/uid_hourly_h3")
+    assert hourly_files == {
+        f"dt={d}/hour_part={h}": 1 for d in days for h in range(12)
+    }
+    for name, got in (("pairs_daily", "pairs"), ("uid_hourly_h3", "hourly")):
+        cols = getattr(first, got).columns
+        want = _rows(getattr(first, got), cols) + _rows(getattr(second, got), cols)
+        assert _rows(spark.read.parquet(f"{gold}/{name}"), cols) == want
+
+
 def test_refresh_days_dq_counts_only_those_days(spark, tmp_path):
     """A targeted rebuild filters silver, not hourly, so the observed
     silver count and the hourly sums cover the same day and DQ passes —
@@ -563,6 +611,68 @@ def test_refresh_days_dq_counts_only_those_days(spark, tmp_path):
     ]) == 0
     days = spark.read.parquet(f"{gold}/uid_hourly_h3").select("dt").distinct()
     assert [str(r["dt"]) for r in days.collect()] == ["2025-01-02"]
+
+
+def _files_scanned(df) -> int:
+    """Files the scans of ``df``'s last execution read (their ``numFiles``
+    metric), looking through AQE's query stages."""
+
+    def walk(node) -> int:
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            return walk(node.executedPlan())
+        if "QueryStage" in name:
+            return walk(node.plan())
+        metrics = node.metrics()
+        n = metrics.apply("numFiles").value() if metrics.contains("numFiles") else 0
+        children = node.children().iterator()
+        while children.hasNext():
+            n += walk(children.next())
+        return n
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def test_export_tracks_prunes_silver_days(spark, tmp_path):
+    """On a silver root, a time window also bounds the day partitions: a
+    one-day window over three days scans a third of the files, and the
+    rows match the unpruned export, also for bounds whose UTC day differs
+    from their local date."""
+    from knot_another_pipeline_spark.operators.tracks import export_tracks
+    from knot_another_pipeline_spark.sources.ingest import (
+        read_silver, to_silver, write_silver,
+    )
+
+    raw = None
+    for day in ("2025-01-01", "2025-01-02", "2025-01-03"):
+        part = _mini_silver(spark, day).union(spark.createDataFrame(
+            [("A", f"{day} 23:59:59", 12.0, 22.0, 5.0),
+             ("B", f"{day} 00:00:00", 12.0, 22.0, 5.0)],
+            "mmsi string, base_date_time string, latitude double, "
+            "longitude double, sog double",
+        ))
+        raw = part if raw is None else raw.union(part)
+    root = str(tmp_path / "silver")
+    write_silver(to_silver(raw).coalesce(1), root)
+    silver = read_silver(spark, root)
+    cols = dict(uid_col="mmsi", ts_col="event_ts", lat_col="lat", lon_col="lon",
+                uids=["A", "B"])
+
+    def export(frame, start, stop):
+        return export_tracks(frame, start=start, stop=stop, **cols)
+
+    unpruned = silver.drop("year", "month", "day")
+    window = ("2025-01-02 00:00:00", "2025-01-02 23:59:59")
+    day = export(silver, *window)
+    want = export(unpruned, *window)
+    assert day.collect() == want.collect() and len(want.collect()) == 6
+    assert _files_scanned(day) * 3 == _files_scanned(want) == len(silver.inputFiles())
+    # 2025-01-02T22:00-05:00 is 2025-01-03 03:00 UTC: day 3's early rows
+    for start, stop in (("2025-01-01T23:30:00-01:00", "2025-01-02T22:00:00-05:00"),
+                        ("2025-01-01 23:59:59", "2025-01-03 00:00:00")):
+        want = export(unpruned, start, stop).collect()
+        assert export(silver, start, stop).collect() == want
+        assert {r["event_ts"].day for r in want} >= {2, 3}
 
 
 def test_backfill_track_ids(spark):
@@ -826,6 +936,54 @@ def test_refresh_gold_catalog_mode_dq_end_to_end(spark, tmp_path):
         )
         for r in rerun.collect():
             assert r["passed"], (r["check_name"], r["observed"], r["expected"])
+    finally:
+        for t in ("uid_hourly_h3", "pairs_daily", "pairs_total"):
+            drop_table(spark, t)
+
+
+def test_refresh_gold_catalog_files_per_bucket(spark, tmp_path):
+    """In catalog mode each pairs_daily day holds one file per bucket its
+    rows hash to (so never more than the 32 buckets), and the bucketed
+    table still joins with itself on (uid_a, uid_b) without a shuffle."""
+    from knot_another_pipeline_spark.plans.gold_refresh import refresh_gold
+    from knot_another_pipeline_spark.sources.warehouse import drop_table
+
+    gold = str(tmp_path / "gold")
+    try:
+        result = refresh_gold(
+            spark,
+            _port_silver(spark, "2025-01-01").union(
+                _port_silver(spark, "2025-01-02")
+            ),
+            output_root=gold, run_checks=False, catalog_tables=True,
+        )
+        buckets = {
+            (r["day_date"].day, r["b"])
+            for r in result.pairs.select(
+                "day_date",
+                F.pmod(F.hash("uid_a", "uid_b"), F.lit(32)).alias("b"),
+            ).collect()
+        }
+        want = {
+            f"year=2025/month=1/day={d}": sum(k[0] == d for k in buckets)
+            for d in (1, 2)
+        }
+        got = _files_per_partition(f"{gold}/pairs_daily")
+        assert got == want and max(got.values()) <= 32
+        daily = spark.table("pairs_daily")
+        assert _rows(daily, result.pairs.columns) == _rows(
+            result.pairs, result.pairs.columns
+        )
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        try:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            j = daily.alias("a").join(
+                spark.table("pairs_daily").alias("b"), ["uid_a", "uid_b"]
+            )
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning" not in plan, plan
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         for t in ("uid_hourly_h3", "pairs_daily", "pairs_total"):
             drop_table(spark, t)

@@ -101,3 +101,47 @@ def test_content_fingerprint_normalizes(spark):
     fps = [r["f"] for r in df.select(content_fingerprint("t").alias("f")).collect()]
     assert fps[0] == fps[1]
     assert fps[0] != fps[2]
+
+
+def _estimate(df) -> int:
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def test_round_pins_keep_size_estimate_bounded(spark):
+    """A round-pinned iterate's size estimate does not grow with the round
+    count: with a plain ``localCheckpoint`` it gained ~19 digits a round."""
+    from knot_another_pipeline_spark.functions.pins import pin_without_stats
+    from knot_another_pipeline_spark.operators.graph import (
+        label_propagation,
+        pagerank,
+    )
+    from knot_another_pipeline_spark.operators.similarity import kmeans_step
+
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 30) for i in range(30)]
+        + [(i, (i + 1) % 30) for i in range(30)],
+        "src long, dst long",
+    )
+    seeds = spark.createDataFrame([(0, "x"), (15, "y")], "node long, label string")
+    for run in (
+        lambda k: pagerank(edges, iterations=k, checkpoint_each=True),
+        lambda k: label_propagation(edges, seeds, iterations=k),
+    ):
+        assert _estimate(run(8)) == _estimate(run(2)) < 2**63
+
+    vecs = spark.createDataFrame(
+        [(i, [i % 5 + 1.0, i % 3 + 1.0, i % 7 + 1.0]) for i in range(40)],
+        "vec_id bigint, embedding array<double>",
+    )
+
+    def kmeans(rounds):
+        out = kmeans_step(vecs, num_centroids=3)
+        for _ in range(rounds):
+            cents = pin_without_stats(out.select(
+                F.col("cell").alias("cent_id"),
+                F.col("new_centroid").alias("centv"),
+            ))
+            out = kmeans_step(vecs, centroids=cents)
+        return out
+
+    assert _estimate(kmeans(8)) == _estimate(kmeans(2))
