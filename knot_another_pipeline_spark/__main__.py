@@ -307,7 +307,7 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "tokenize":
             import os
 
-            from pyspark.sql import functions as F
+            from pyspark.sql import Observation, functions as F
 
             from knot_another_pipeline_spark.operators.text_analysis import (
                 build_vocab,
@@ -323,18 +323,25 @@ def main(argv: list[str] | None = None) -> int:
             )
             vocab_path = os.path.join(args.output, "vocab")
             enc_path = os.path.join(args.output, "encoded")
-            vocab.write.mode("overwrite").parquet(vocab_path)
-            vocab_back = spark.read.parquet(vocab_path)
+            # every printed count is an Observation on the write that
+            # produces it: no read-back aggregate jobs
+            vocab_obs = Observation("vocab")
+            vocab.observe(vocab_obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(vocab_path)
             encoded = encode_documents(
-                docs, vocab_back, id_col="doc_id", text_col="text"
+                docs, spark.read.parquet(vocab_path), id_col="doc_id",
+                text_col="text",
             )
-            encoded.write.mode("overwrite").parquet(enc_path)
-            stats = spark.read.parquet(enc_path).agg(
+            enc_obs = Observation("encoded")
+            encoded.observe(
+                enc_obs,
                 F.count(F.lit(1)).alias("docs"),
                 F.sum("n_tokens").alias("tokens"),
                 F.sum("n_oov").alias("oov"),
-            ).collect()[0]
-            v_size = vocab_back.count()
+            ).write.mode("overwrite").parquet(enc_path)
+            stats = enc_obs.get
+            v_size = vocab_obs.get["n"]
             oov_pct = (
                 100.0 * stats["oov"] / stats["tokens"]
                 if stats["tokens"]
@@ -357,21 +364,15 @@ def main(argv: list[str] | None = None) -> int:
                     token_col="n_tokens",
                     seq_len=args.seq_len,
                 )
-                packs.write.mode("overwrite").parquet(packs_path)
-                n_packs = (
-                    spark.read.parquet(packs_path)
-                    .agg(
-                        (
-                            F.max(
-                                F.col("pack_id")
-                                + F.col("n_packs_spanned")
-                                - 1
-                            )
-                            + 1
-                        ).alias("n")
-                    )
-                    .collect()[0]["n"]
-                )
+                packs_obs = Observation("packs")
+                packs.observe(
+                    packs_obs,
+                    (
+                        F.max(F.col("pack_id") + F.col("n_packs_spanned") - 1)
+                        + 1
+                    ).alias("n"),
+                ).write.mode("overwrite").parquet(packs_path)
+                n_packs = packs_obs.get["n"]
                 print(
                     f"packed into {n_packs} x {args.seq_len}-token "
                     f"windows -> {packs_path}"
@@ -403,10 +404,11 @@ def main(argv: list[str] | None = None) -> int:
                     text_col="text",
                     merges=[(a, b) for _, a, b, _ in learned],
                 )
-                seg.write.mode("overwrite").parquet(bpe_path)
-                n_sym = spark.read.parquet(bpe_path).agg(
-                    F.sum("n_symbols").alias("n")
-                ).collect()[0]["n"]
+                seg_obs = Observation("bpe")
+                seg.observe(seg_obs, F.sum("n_symbols").alias("n")).write.mode(
+                    "overwrite"
+                ).parquet(bpe_path)
+                n_sym = seg_obs.get["n"]
                 print(
                     f"learned {len(learned)} BPE merges -> {merges_path}; "
                     f"segmented corpus ({n_sym} symbols) -> {bpe_path}"

@@ -396,11 +396,10 @@ def dbscan_grid(
         .filter(F.col("n_points") >= min_pts)
     )
     key = F.concat_ws(":", F.col("cell_x"), F.col("cell_y"))
-    # The components loop runs on a PACKED NUMERIC cell key so it takes
-    # connected_components' numeric fast body (self-loop propagation +
-    # sum-convergence; measured 4.7 s → 1.3 s on this loop at sf0.1 —
-    # string keys also converge in more rounds because lexicographic
-    # minima hop differently). 2^29/2^30 packing supports |cell index|
+    # The components loop runs on a PACKED NUMERIC cell key: a string
+    # key would pay connected_components' id map (one more write and
+    # two joins), and the old string-keyed loop took 4.7 s against
+    # 1.3 s on this graph at sf0.1. 2^29/2^30 packing supports |cell index|
     # < 5.4e8, i.e. cell_deg down to ~1e-6°, without overflowing int64.
     # The public cluster label stays the lexicographic minimum "x:y"
     # string, restored afterwards by a min-per-component remap over the
@@ -440,17 +439,11 @@ def dbscan_grid(
         .select(F.col("key_a").alias("id_a"), F.col("nkey").alias("id_b"))
         .distinct()
     )
-    # dense-CELL adjacency graph: bounded by grid size (not points), so
-    # the cheaper block-storage round pin is safe here — the parquet
-    # pin's per-round file commit would dominate this tiny loop.
     # Explicit JUMPED composition: grid adjacency has genuine chains
     # (an anchorage strip is a path of cells), where jump-free
     # propagation measured 8 rounds vs 4 — unlike the near-dup pair
-    # graphs the jump-free numeric default is tuned for.
-    comp = connected_components(
-        pairs, pin="local_checkpoint", half_steps_per_round=2,
-        pointer_jumps=1,
-    )
+    # graphs the jump-free default is tuned for.
+    comp = connected_components(pairs, half_steps_per_round=2, pointer_jumps=1)
     members = dense.join(
         comp.withColumnRenamed("id", "nkey"), "nkey", "left"
     )

@@ -829,33 +829,6 @@ def test_assign_shards_group_col_restarts_per_group(spark):
     assert max(r["shard"] for r in by_grp["val"]) == 0
 
 
-def test_connected_components_eager_free_opt_in(spark):
-    """free_intermediate_checkpoints=True (classic session) produces the
-    same components as the default lazy path and doesn't leak blocks from
-    a pre-existing concurrent cache (advice r3: private-API use gated)."""
-    from knot_another_pipeline_spark.operators.dedup import connected_components
-
-    bystander = spark.createDataFrame([(1,)], "x long").cache()
-    bystander.count()  # materialize the unrelated cache before the call
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
-        "id_a long, id_b long",
-    )
-    expected = {
-        r["id"]: r["component"] for r in connected_components(pairs).collect()
-    }
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            pairs, free_intermediate_checkpoints=True
-        ).collect()
-    }
-    assert got == expected
-    assert bystander.count() == 1  # cache survived (registry diff is scoped)
-    assert bystander.storageLevel.useMemory  # still marked persistent
-    bystander.unpersist()
-
-
 def test_unigram_logprob_score_ranks_common_prose_higher(spark):
     """Docs made of corpus-common tokens outscore rare-vocabulary docs;
     a doc scored against a foreign model is all-OOV and scores lowest;

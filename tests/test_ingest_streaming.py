@@ -1063,6 +1063,54 @@ def test_cli_tokenize(spark, tmp_path):
     assert enc[3]["token_ids"] == [1] and enc[3]["n_oov"] == 0
 
 
+def test_cli_tokenize_counts_in_band(spark, tmp_path):
+    """tokenize prints its vocab, encoded, pack and BPE counts from
+    observations on the writes: no job reads an output back to count
+    it, and the printed counts are the outputs' own."""
+    import contextlib
+    import json
+
+    from knot_another_pipeline_spark.__main__ import main
+
+    src = tmp_path / "tok.jsonl"
+    lines = [
+        json.dumps({"id": 1, "text": "alpha beta alpha gamma"}),
+        json.dumps({"id": 2, "text": "alpha beta rare"}),
+        json.dumps({"id": 3, "text": "alpha"}),
+    ]
+    src.write_text("\n".join(lines) + "\n")
+    out = tmp_path / "tokenized"
+    buf = io.StringIO()
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-tokenize", "cli tokenize with packs and BPE")
+    try:
+        with contextlib.redirect_stdout(buf):
+            assert main([
+                "tokenize", "--input", str(src), "--output", str(out),
+                "--min-count", "2", "--seq-len", "4", "--bpe-merges", "2",
+            ]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cli-tokenize")) == 31
+    enc = spark.read.parquet(str(out / "encoded")).agg(
+        F.count(F.lit(1)), F.sum("n_tokens"), F.sum("n_oov")
+    ).first()
+    n_packs = spark.read.parquet(str(out / "packs")).agg(
+        F.max(F.col("pack_id") + F.col("n_packs_spanned"))
+    ).first()[0]
+    n_sym = spark.read.parquet(str(out / "bpe")).agg(
+        F.sum("n_symbols")
+    ).first()[0]
+    assert tuple(enc) == (3, 8, 2)
+    assert buf.getvalue() == (
+        f"vocab 2 tokens -> {out}/vocab; encoded 3 docs / 8 tokens "
+        f"(25.00% OOV) -> {out}/encoded\n"
+        f"packed into {n_packs} x 4-token windows -> {out}/packs\n"
+        f"learned 2 BPE merges -> {out}/merges; segmented corpus "
+        f"({n_sym} symbols) -> {out}/bpe\n"
+    )
+
+
 def test_streaming_interval_join_matches_batch_and_bounds_window(
     spark, tmp_path
 ):

@@ -3,9 +3,12 @@
 Covers the round-7 verdict/advice items that are testable in-repo:
 - the ``bradley_terry`` iterate is round-pinned, so plan depth (and
   analysis cost) stays constant in ``iterations`` (VERDICT r7 task #4);
-- ``connected_components``' default driver-local parquet scratch is
-  refused on non-local masters instead of silently losing executor
-  writes, and a caller-provided scratch keeps working (ADVICE r7 #2).
+- ``connected_components``' parquet round scratch: a caller-provided
+  scratch works on any master; without one, the scratch defaults to a
+  directory under the SparkContext's checkpoint directory (so
+  ``canonical_docs`` runs on a cluster master), then to a driver temp
+  dir on a local master only, and is otherwise refused instead of
+  silently losing executor writes.
 """
 
 from __future__ import annotations
@@ -117,6 +120,60 @@ def test_components_caller_scratch_returns_parquet_scan(spark, tmp_path):
     # the scan reads the caller's scratch slot (the plan string
     # truncates long paths, so check the actual input files)
     assert any("cc_scratch" in f for f in out.inputFiles())
+
+
+def test_canonical_docs_scratch_under_checkpoint_dir_on_cluster_master(
+    spark, monkeypatch, tmp_path
+):
+    """On a non-local master with a checkpoint directory set,
+    ``canonical_docs`` takes its components scratch under that directory,
+    returns exact clusters and representatives, and leaves no scratch
+    behind. An unrelated cached frame stays cached across the call."""
+    from pyspark import SparkContext
+
+    from knot_another_pipeline_spark.operators import dedup
+
+    bystander = spark.createDataFrame([(1,)], "x long").cache()
+    bystander.count()
+    corpus = spark.createDataFrame(
+        [(1, "aa"), (2, "aaaa"), (3, "aaa"), (4, "b"), (5, "cc"),
+         (6, "cc")],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (3, 2), (5, 6)], "id_a long, id_b long"
+    )
+    checkpoints = tmp_path / "checkpoints"
+    real_get = type(spark.conf).get
+
+    def fake_get(self, key, *args, **kwargs):
+        if key == "spark.master":
+            return "spark://imaginary-cluster:7077"
+        return real_get(self, key, *args, **kwargs)
+
+    # patched, not set: a real setCheckpointDir cannot be undone and
+    # would change every later test's default scratch
+    monkeypatch.setattr(type(spark.conf), "get", fake_get)
+    monkeypatch.setattr(
+        SparkContext, "getCheckpointDir", lambda self: str(checkpoints)
+    )
+    try:
+        got = {
+            r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["rep_id"],
+                          r["is_rep"])
+            for r in dedup.canonical_docs(corpus, pairs).collect()
+        }
+        assert got == {
+            1: (1, 3, 2, False), 2: (1, 3, 2, True), 3: (1, 3, 2, False),
+            4: (4, 1, 4, True),
+            5: (5, 2, 5, True), 6: (5, 2, 5, False),
+        }
+        # the rounds wrote under the checkpoint dir, and nothing is left
+        assert checkpoints.is_dir() and list(checkpoints.iterdir()) == []
+        assert bystander.count() == 1
+        assert bystander.storageLevel.useMemory
+    finally:
+        bystander.unpersist()
 
 
 def test_streaming_fairness_monitor_late_and_too_late_replay(
